@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * set-oriented left-outer equi-join. The cache is small (one row per file) so
   * Catalyst auto-broadcasts it; if state ever outgrows broadcast the same plan
   * degrades gracefully to a sort-merge join — correct at 100 TB with no code
-  * change.
+  * change. (That holds for the joins here; [[Sync]]'s pruned content read
+  * has its own driver-side limit, see `Sync.run`.)
   */
 object Delta {
 
@@ -36,4 +37,25 @@ object Delta {
   def deleted(scan: DataFrame, cache: DataFrame,
               keyCol: String = "path"): DataFrame =
     cache.join(scan.select(keyCol), Seq(keyCol), "left_anti")
+
+  /** Values of the `status` column [[classify]] adds. */
+  val Changed   = "changed"
+  val Gone      = "gone"
+  val Unchanged = "unchanged"
+
+  /** [[changed]] and [[deleted]] in one pass: the full outer join of `scan`
+    * and `cache` on the key, one row per key in either, carrying the
+    * columns of both plus `status` — [[Changed]] (strictly newer than the
+    * cached mtime, missing ⇒ 0), [[Gone]] (cached but not scanned) or
+    * [[Unchanged]]. `scan`'s `mtimeCol` must be non-null: a null marks the
+    * scan side absent.
+    */
+  def classify(scan: DataFrame, cache: DataFrame,
+               keyCol: String = "path", mtimeCol: String = "mtime",
+               cachedCol: String = "last_edit_time"): DataFrame =
+    scan.join(cache, Seq(keyCol), "full_outer")
+      .withColumn("status",
+        when(col(mtimeCol).isNull, lit(Gone))
+          .when(col(mtimeCol) > coalesce(col(cachedCol), lit(0L)), lit(Changed))
+          .otherwise(lit(Unchanged)))
 }

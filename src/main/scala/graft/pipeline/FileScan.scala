@@ -15,7 +15,17 @@ import org.apache.spark.sql.functions._
   */
 object FileScan {
 
-  /** One row per matching file: (path, mtime epoch-seconds, text). */
+  /** Column holding each row's `_metadata.file_path`: the key Spark prunes
+    * listed files by. It is URL-encoded (`sp%20ace.md`) where `path` is not
+    * (`sp ace.md`), so file sets handed to [[only]] must come from this
+    * column, never be derived from `path`.
+    */
+  val FileKey = "file"
+
+  /** One row per matching file: (path, mtime epoch-seconds, text, file).
+    * The directory is listed here, once; later filters on the returned
+    * frame reuse that listing.
+    */
   def scan(spark: SparkSession, rootDir: String,
            pathRegex: String = ".*\\.md$"): DataFrame =
     spark.read.format("binaryFile")
@@ -26,5 +36,13 @@ object FileScan {
         col("path"),
         // epoch seconds, matching the reference's int(getmtime) (main.py:59)
         unix_timestamp(col("modificationTime")).as("mtime"),
-        decode(col("content"), "UTF-8").as("text"))
+        decode(col("content"), "UTF-8").as("text"),
+        col("_metadata.file_path").as(FileKey))
+
+  /** The rows of `scan` whose [[FileKey]] is in `files`. The filter is on
+    * the file-source metadata column, so Spark drops the other listed files
+    * before opening any: only these files' bytes are read.
+    */
+  def only(scan: DataFrame, files: Seq[String]): DataFrame =
+    scan.filter(col(FileKey).isin(files: _*))
 }

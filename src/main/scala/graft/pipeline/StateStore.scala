@@ -12,7 +12,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Writes go through a staging directory + atomic-ish swap so the store can be
   * rewritten from a plan that read it (Spark cannot overwrite an input path
   * in-flight). State is tiny relative to the corpus (one row per file), so a
-  * snapshot rewrite per sync is the right trade at any scale.
+  * snapshot rewrite per sync is the right trade at any scale: [[Sync]]
+  * writes it straight from the (path, mtime) listing and the changed
+  * files' cached guard verdicts it already holds, reading no file and no
+  * index.
   */
 final class StateStore(path: String) {
 

@@ -53,8 +53,12 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
   /** Last-writer-wins upsert of `vectors` (id, embedding, metadata, version);
     * one key-shuffle, no per-row RPC (the reference does one upsert RPC per
     * vector, `main.py:185`). Staging swap as in [[StateStore]].
+    *
+    * `deletes` (an `id` column) are erased in the same rewrite: the result
+    * equals this upsert followed by [[delete]] of the same ids, so an id in
+    * both sets ends up erased — for one staged swap instead of two.
     */
-  def upsert(vectors: DataFrame): Unit = {
+  def upsert(vectors: DataFrame, deletes: Option[DataFrame] = None): Unit = {
     val spark = vectors.sparkSession
     val p     = new Path(path)
     val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -71,7 +75,7 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     val valid  = vectors.filter(size(col("embedding")) === dim)
     val merged = Upsert.merge(read(spark), valid.select("id", "embedding", "metadata", "version"),
       Seq("id"), "version")
-    writeSwapped(spark, fs, p, merged)
+    writeSwapped(spark, fs, p, deletes.fold(merged)(erase(merged, _)))
   }
 
   /** Delete rows by key — the erase half the reference lacks entirely
@@ -87,9 +91,11 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     val p     = new Path(path)
     val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return // nothing indexed — nothing to erase
-    val remaining = read(spark).join(ids.select("id"), Seq("id"), "left_anti")
-    writeSwapped(spark, fs, p, remaining)
+    writeSwapped(spark, fs, p, erase(read(spark), ids))
   }
+
+  private def erase(rows: DataFrame, ids: DataFrame): DataFrame =
+    rows.join(ids.select("id"), Seq("id"), "left_anti")
 
   private def writeSwapped(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                            p: Path, content: DataFrame): Unit = {

@@ -274,4 +274,184 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(r.skippedTooLong === 1 && r.indexed === 0)
     assert(indexedIds().isEmpty, "stale pre-edit vector must be erased")
   }
+
+  test("VectorIndex.upsert with deletes equals upsert then delete, in one rewrite") {
+    def rows(rs: (String, Seq[Double], Long)*) =
+      rs.map { case (id, e, v) => (id, e, Map.empty[String, String], v) }
+        .toDF("id", "embedding", "metadata", "version")
+    val base = rows(("a", Seq(1.0, 0.0), 1L), ("b", Seq(0.0, 1.0), 1L), ("c", Seq(1.0, 1.0), 1L))
+    val vecs = rows(("a", Seq(0.0, 1.0), 2L), ("d", Seq(1.0, 0.0), 2L),
+      ("bad", Seq(1.0, 0.0, 0.0), 2L), ("e", Seq(0.5, 0.5), 2L))
+    val dels = Seq("b", "e", "absent").toDF("id") // "e" is in both sets
+    def fresh(): (String, VectorIndex) = {
+      val dir = Files.createTempDirectory("graft_upd").resolve("index").toString
+      val idx = new VectorIndex(dir, 2, Some("embedder-v1"))
+      idx.upsert(base)
+      (dir, idx)
+    }
+    def content(idx: VectorIndex) = idx.read(spark).collect()
+      .map(r => (r.getString(0), r.getSeq[Double](1), r.getLong(3))).sortBy(_._1).toSeq
+
+    val (oneDir, one) = fresh()
+    one.upsert(vecs, Some(dels))
+    val (_, two) = fresh()
+    two.upsert(vecs)
+    two.delete(dels)
+    assert(content(one) === content(two))
+    // the id in both sets is erased; the wrong-dimension row is rejected
+    assert(content(one).map(_._1) === Seq("a", "c", "d"))
+    // no deletes: exactly the rows a plain upsert always wrote
+    val (_, three) = fresh()
+    three.upsert(vecs, None)
+    assert(content(three) === Seq(("a", Seq(0.0, 1.0), 2L), ("b", Seq(0.0, 1.0), 1L),
+      ("c", Seq(1.0, 1.0), 1L), ("d", Seq(1.0, 0.0), 2L), ("e", Seq(0.5, 0.5), 2L)))
+    // the embedder marker survives the combined rewrite, also from an
+    // unstamped writer, and still refuses another embedder
+    new VectorIndex(oneDir, 2).upsert(rows(("f", Seq(1.0, 0.0), 3L)), Some(Seq("a").toDF("id")))
+    val e = intercept[IllegalArgumentException] {
+      new VectorIndex(oneDir, 2, Some("embedder-v2")).upsert(vecs, Some(dels))
+    }
+    assert(e.getMessage.contains("embedder-v1"))
+    assert(content(one).map(_._1) === Seq("c", "d", "f"))
+  }
+
+  /** Index ids with versions, and state rows with flags, describe exactly
+    * the `.md` files under `root`: every live file is in state with its
+    * mtime, and indexed at that mtime unless it is in `tooLong`. */
+  private def assertMirrors(root: Path, state: String, index: String, names: Seq[String],
+                            tooLong: Set[String]): Unit = {
+    val live = names.filter(n => Files.exists(root.resolve(n)))
+    def id(n: String) = "file:" + root.resolve(n).toAbsolutePath.normalize.toString
+    def mtime(n: String) = Files.getLastModifiedTime(root.resolve(n)).toMillis / 1000
+    val idx = new VectorIndex(index, 8).read(spark).select("id", "version").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(idx === live.filterNot(tooLong).map(n => id(n) -> mtime(n)).toMap)
+    val st = new StateStore(state).read(spark).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+    assert(st === live.map(n => id(n) -> ((mtime(n), tooLong(n)))).toMap)
+  }
+
+  test("Sync: file names Spark URL-encodes keep their edits, deletes and guard crossings") {
+    // content reads are pruned by `_metadata.file_path`, which is
+    // URL-encoded (%20, %25, %5B, %7B) where `path` is not: a prune set
+    // built from `path` would skip these files' content and still record
+    // their new mtime in state — a silently lost edit
+    val root  = Files.createTempDirectory("graft_names")
+    val names = Seq("sp ace.md", "pct%41.md", "br[1].md", "s d/x{y}.md", "ü.md")
+    val long  = Seq.fill(9000)("w").mkString(" ")
+    Files.createDirectories(root.resolve("s d"))
+    def put(n: String, text: String, t: Long): Unit = {
+      Files.writeString(root.resolve(n), text); touch(root.resolve(n), t)
+    }
+    names.foreach(n => put(n, s"first words of $n", 1000000L))
+    val state = Files.createTempDirectory("graft_ns").resolve("state").toString
+    val index = Files.createTempDirectory("graft_ni").resolve("index").toString
+    val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
+    val r1 = sync.run(spark)
+    assert((r1.scanned, r1.changed, r1.skippedTooLong, r1.indexed, r1.deleted) === ((5, 5, 0, 5, 0)))
+    assertMirrors(root, state, index, names, Set.empty)
+
+    // an edit, a delete, and a doc pushed over the guard
+    put("sp ace.md", "second words", 1000100L)
+    Files.delete(root.resolve("pct%41.md"))
+    put("br[1].md", long, 1000100L)
+    val r2 = sync.run(spark)
+    assert((r2.scanned, r2.changed, r2.skippedTooLong, r2.indexed, r2.deleted) === ((4, 2, 1, 1, 1)))
+    assertMirrors(root, state, index, names, Set("br[1].md"))
+
+    // cut back under the guard, plus two more edits
+    put("br[1].md", "short again", 1000200L)
+    put("s d/x{y}.md", "third words", 1000200L)
+    put("ü.md", "fourth words", 1000200L)
+    val r3 = sync.run(spark)
+    assert((r3.scanned, r3.changed, r3.skippedTooLong, r3.indexed, r3.deleted) === ((4, 3, 0, 3, 0)))
+    assertMirrors(root, state, index, names, Set.empty)
+    val r4 = sync.run(spark)
+    assert(r4.changed === 0 && r4.deleted === 0)
+  }
+
+  test("Sync cycle: one index rewrite, and only changed files' content is read") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("graft_shape")
+    (0 until 20).foreach { i =>
+      val f = root.resolve(f"d$i%02d.md")
+      Files.writeString(f, s"document $i " + Seq.fill(200)(s"w$i").mkString(" "))
+      touch(f, 1000000L)
+    }
+    val state = Files.createTempDirectory("graft_shs").resolve("state").toString
+    val index = Files.createTempDirectory("graft_shi").resolve("index").toString
+    val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
+    assert(sync.run(spark).indexed === 20)
+
+    val edited = root.resolve("d03.md")
+    Files.writeString(edited, "an edited document")
+    touch(edited, 1000100L)
+    Files.delete(root.resolve("d07.md"))
+
+    // Counted from the executed plans: writes whose output is the index's
+    // staging dir, and the binaryFile scans that read `content` (each once,
+    // also when a cached frame runs it) with the bytes of the files they
+    // selected. Stage inputMetrics cannot tell these bytes apart: a stage
+    // reading a cached frame counts its in-memory bytes as input, and the
+    // merge's stage also reads the index parquet.
+    val staging = new org.apache.hadoop.fs.Path(index + ".staging").toUri.getPath
+    val writes  = new java.util.concurrent.atomic.AtomicInteger
+    val reads   = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
+    def contentScans(plan: SparkPlan): Unit = plan.foreach {
+      case a: AdaptiveSparkPlanExec => contentScans(a.executedPlan)
+      case q: QueryStageExec        => contentScans(q.plan)
+      case m: InMemoryTableScanExec => contentScans(m.relation.cachedPlan)
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] &&
+          s.requiredSchema.fieldNames.contains("content") => reads.add(s)
+      case _ =>
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        qe.analyzed.foreach {
+          case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toUri.getPath == staging =>
+            writes.incrementAndGet()
+          case _ =>
+        }
+        contentScans(qe.executedPlan)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r = try sync.run(spark) finally {
+      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(r.changed === 1 && r.indexed === 1 && r.deleted === 1)
+    assert(writes.get === 1, "one staged index rewrite per cycle")
+    import scala.jdk.CollectionConverters._
+    val bytesRead = reads.asScala.toSeq.map(_.metrics("filesSize").value).sum
+    assert(reads.size === 1 && bytesRead === Files.size(edited),
+      s"${reads.size} content scans read $bytesRead bytes for a ${Files.size(edited)}-byte delta")
+  }
+
+  test("Sync: a run that fails leaves nothing cached") {
+    val root  = mkCorpus()
+    val state = Files.createTempDirectory("graft_fs").resolve("state").toString
+    val index = Files.createTempDirectory("graft_fi").resolve("index").toString
+    Seq("a.md", "sub/b.md", "sub/nested/c.md").foreach(f => touch(root.resolve(f), 1000000L))
+    assert(new Sync(root.toString, state, index, HashingEmbedder(8)).run(spark).indexed === 3)
+    touch(root.resolve("a.md"), 1000100L)
+    val other = new Embedder {
+      def dim = 8
+      def id  = "another-embedder:dim=8"
+      def embed(text: org.apache.spark.sql.Column) = HashingEmbedder(8).embed(text)
+    }
+    spark.catalog.clearCache() // suites share the session
+    val e = intercept[IllegalArgumentException] {
+      new Sync(root.toString, state, index, other).run(spark)
+    }
+    assert(e.getMessage.contains("embedder"))
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed sync must not leak cached frames")
+  }
 }
