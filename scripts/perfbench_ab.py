@@ -13,8 +13,10 @@ Usage, from the root of a checkout:
         --seeds 11-20 [--seconds 20] [--trace 0]
 
 Each side builds itself on its first run (see perfbench/README.md). Metric
-names and directions come from B's BENCHMARK.json. Steal is read from
-/proc/stat around each run (0 where that file does not exist).
+names and directions come from B's BENCHMARK.json: its `end_to_end` list,
+or with `--trace 1` its `per_layer` list, since a traced run prints only
+the per-layer figures. Steal is read from /proc/stat around each run (0
+where that file does not exist).
 """
 import argparse
 import json
@@ -81,7 +83,7 @@ def main():
 
     with open(os.path.join(a.b, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    metrics = [(m["name"], m["better"]) for m in bench["end_to_end"]]
+    metrics = [(m["name"], m["better"]) for m in bench["per_layer" if a.trace else "end_to_end"]]
     sides = {"A": a.a, "B": a.b}
     results = {"A": {}, "B": {}}
 

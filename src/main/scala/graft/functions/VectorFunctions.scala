@@ -9,25 +9,28 @@ import org.apache.spark.sql.functions._
   * vector store (reference `vectrekker/main.py:23,166` — cosine metric;
   * dot / euclidean are the standard metric set the config field ranges over).
   *
-  * All functions are built from Spark higher-order functions
-  * (`zip_with` / `aggregate` / `transform`) rather than Scala UDFs, so they
-  * stay inside whole-stage codegen and never box rows — this is the difference
-  * between a scan-speed top-k and a serialization-bound one at 100 TB.
+  * No helper is a Scala UDF, so none boxes rows. The dot product, cosine,
+  * squared norm and matrix × vector are native codegen kernels
+  * ([[graft.functions.expressions]]), so an operator scoring with them stays
+  * inside whole-stage codegen. `euclidean`, `l2Normalize` and the `quant*`
+  * helpers are still built from Spark higher-order functions (`zip_with` /
+  * `aggregate` / `transform`); those are `CodegenFallback` expressions, and
+  * any one of them keeps its whole operator out of whole-stage codegen.
   *
   * Math is forced to Double: fixture embeddings are `ARRAY<FLOAT>` and
   * float accumulation both loses precision and diverges from any SQL oracle
   * computing in double.
   */
 object VectorFunctions {
-  import graft.functions.expressions.{CosineSimilarity, DotProduct}
+  import graft.functions.expressions.{CosineSimilarity, DotProduct, L2NormSq}
   import org.apache.spark.sql.{GraftSqlBridge => ExpressionUtils}
 
   /** Cast an array column to array<double> for numerically stable math. */
   def asDouble(a: Column): Column = a.cast("array<double>")
 
   /** Fused single-pass dot product (native codegen Expression — no
-    * intermediate array per pair, unlike the HOF form). Bit-identical to
-    * [[dot]].
+    * intermediate array per pair, unlike the HOF form `aggregate(zip_with)`,
+    * to which it is bit-identical).
     */
   def dotFused(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(
@@ -48,35 +51,30 @@ object VectorFunctions {
     ExpressionUtils.column(graft.functions.expressions.MatVecMul(
       ExpressionUtils.expression(asDouble(v)), mat))
 
-  /** Fused single-pass cosine (native codegen Expression). Bit-identical to
-    * [[cosine]] — same accumulation order, `dot/(sqrt(na)*sqrt(nb))`.
+  /** Fused single-pass cosine (native codegen Expression): one sequential
+    * loop, `dot/(sqrt(na)*sqrt(nb))`; zero norm => null.
     */
   def cosineFused(a: Column, b: Column): Column =
     ExpressionUtils.column(CosineSimilarity(
       ExpressionUtils.expression(asDouble(a)), ExpressionUtils.expression(asDouble(b))))
 
   /** Sequential left-to-right dot product — deterministic accumulation order
-    * (matters for float-exact oracle comparison).
+    * (matters for float-exact oracle comparison). The [[dotFused]] kernel.
     */
-  def dot(a: Column, b: Column): Column = {
-    val (ad, bd) = (asDouble(a), asDouble(b))
-    aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-  }
+  def dot(a: Column, b: Column): Column = dotFused(a, b)
 
-  def l2NormSq(a: Column): Column = {
-    val ad = asDouble(a)
-    aggregate(ad, lit(0.0), (acc, x) => acc + x * x)
-  }
+  /** Squared L2 norm, a sequential left-to-right sum of squares (native
+    * codegen kernel [[graft.functions.expressions.L2NormSq]]).
+    */
+  def l2NormSq(a: Column): Column =
+    ExpressionUtils.column(L2NormSq(ExpressionUtils.expression(asDouble(a))))
 
   def l2Norm(a: Column): Column = sqrt(l2NormSq(a))
 
-  /** Cosine similarity in [-1, 1]; null-safe division (0-norm => null —
-    * guarded so ANSI mode doesn't throw DIVIDE_BY_ZERO).
+  /** Cosine similarity in [-1, 1]; zero norm => null. The [[cosineFused]]
+    * kernel.
     */
-  def cosine(a: Column, b: Column): Column = {
-    val np = l2Norm(a) * l2Norm(b)
-    when(np =!= 0.0, dot(a, b) / np)
-  }
+  def cosine(a: Column, b: Column): Column = cosineFused(a, b)
 
   /** Pairwise cosine from precomputed squared norms — identical arithmetic to
     * [[cosine]] (`dot / (sqrt(nsqA) * sqrt(nsqB))`, same op order, so results

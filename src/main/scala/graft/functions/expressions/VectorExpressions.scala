@@ -2,7 +2,7 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * The higher-order-function formulation (`aggregate(zip_with(...))`)
   * allocates an intermediate array per evaluated pair; these kernels are a
   * single allocation-free loop. Accumulation order (left-to-right per
-  * accumulator, `dot/(sqrt(na)*sqrt(nb))`) is IDENTICAL to the HOF form in
-  * [[graft.functions.VectorFunctions]], so results are bit-for-bit equal and
-  * the DuckDB oracle parity is preserved.
+  * accumulator, `dot/(sqrt(na)*sqrt(nb))`) is IDENTICAL to the HOF form,
+  * so results are bit-for-bit equal and the DuckDB oracle parity is
+  * preserved; `VectorFunctionsSpec` keeps the HOF forms as the reference.
   *
   * Semantics match the HOF form also at the edges: mismatched lengths or a
   * null element => null; zero norm => null.
@@ -132,6 +132,61 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorP
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_cosine"
+}
+
+/** Squared L2 norm, one sequential loop `s += x*x` from 0.0 — the
+  * accumulation order of `aggregate(x, 0.0, (acc, y) -> acc + y*y)`, so the
+  * result is bit-identical to that higher-order form. Unlike it (Spark's
+  * `ArrayAggregate` is a `CodegenFallback`), this kernel keeps the operator
+  * that holds it inside whole-stage codegen. A null array or a null element
+  * gives null; an empty array gives 0.0.
+  */
+case class L2NormSq(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<double> input, got ${other.simpleString}")
+  }
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i)) return null
+      val xi = x.getDouble(i)
+      s += xi * xi
+      i += 1
+    }
+    s
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val n  = ctx.freshName("n")
+      val i  = ctx.freshName("i")
+      val s  = ctx.freshName("s")
+      val xi = ctx.freshName("xi")
+      s"""
+         |int $n = $a.numElements();
+         |double $s = 0.0;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |  double $xi = $a.getDouble($i);
+         |  $s += $xi * $xi;
+         |}
+         |if (!${ev.isNull}) ${ev.value} = $s;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_l2normsq"
 }
 
 /** All band buckets of the corpus-mean-centered banded-SRP family

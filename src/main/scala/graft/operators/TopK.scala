@@ -12,9 +12,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Scale design:
   *  - Single query: score is a codegen'd expression over the corpus scan;
-  *    `orderBy(desc).limit(k)` plans as `TakeOrderedAndProject` — per-partition
-  *    heap of size k + driver merge of k*numPartitions rows. No full sort, no
-  *    shuffle of the corpus. This survives a 100 TB corpus untouched.
+  *    the scoring `Project` runs inside whole-stage codegen as long as the
+  *    score holds no higher-order function (each one is a `CodegenFallback`,
+  *    which keeps its whole operator out: the norm and dot product are native
+  *    kernels) and the query vector is ONE literal ([[vecLit]]), so a
+  *    dim-1536 query adds one node, not 1536, to every analysis and
+  *    optimizer pass. `orderBy(desc).limit(k)` plans as
+  *    `TakeOrderedAndProject` — per-partition heap of size k + driver merge
+  *    of k*numPartitions rows. No full sort, no shuffle of the corpus. This
+  *    survives a 100 TB corpus untouched.
   *  - Batch of queries: broadcast the (small) query set, crossJoin so each
   *    corpus partition scores all queries locally (corpus never shuffles),
   *    then per-query top-k. For few queries we aggregate per-partition
@@ -22,8 +28,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object TopK {
 
-  /** Literal array<double> column from a local query vector. */
-  def vecLit(v: Seq[Double]): Column = array(v.map(lit): _*)
+  /** Literal array<double> column from a local query vector: one `Literal`
+    * node whatever the dimension. */
+  def vecLit(v: Seq[Double]): Column = lit(v.toArray)
 
   /** Top-k rows of `corpus` by cosine similarity to a literal query vector.
     * Deterministic: ties broken by `idCol`. `roundTo` stabilizes the ordering
@@ -65,7 +72,13 @@ object TopK {
     // row, not per pair
     val q2 = queries.select(col(qIdCol).as("__knn_qid"), col(qVecCol).as("__knn_qvec"))
       .withColumn("__nsq_q", l2NormSq(col("__knn_qvec")))
-    val c2 = corpus.select(col(cIdCol).as("__knn_cid"), col(cVecCol).as("__knn_cvec"))
+    // The corpus vector is copied once per row into a plain double array
+    // (`slice` of the whole array): inside whole-stage codegen the pair loop
+    // would otherwise read it straight from the parquet batch, decoding a
+    // dictionary-encoded column again for every query it meets, and a float
+    // column would be cast once per pair.
+    val c2 = corpus.select(col(cIdCol).as("__knn_cid"),
+        slice(asDouble(col(cVecCol)), 1, Int.MaxValue).as("__knn_cvec"))
       .withColumn("__nsq_c", l2NormSq(col("__knn_cvec")))
     val scored = c2.crossJoin(broadcast(q2))
       .filter(lit(!excludeSelf) || col("__knn_qid") =!= col("__knn_cid"))

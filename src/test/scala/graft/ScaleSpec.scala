@@ -1,7 +1,12 @@
 package graft
 
+import graft.functions.expressions.L2NormSq
 import graft.operators.Skew
 import graft.sources.Bucketing
+import org.apache.spark.sql.catalyst.expressions.Slice
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,6 +48,77 @@ class ScaleSpec extends AnyFunSuite with SparkTestSession {
     assert(viaAgg === viaWindow)
     assert(viaAgg.nonEmpty && viaAgg.size === 20) // 5 queries x k=4
   }
+
+  test("single-query topK scores inside whole-stage codegen; the query is one literal") {
+    import graft.operators.TopK
+    val top = TopK.topK(vectorCorpus, "v", "id", Seq.tabulate(4)(i => 1.0 / (i + 1)), k = 3)
+    val plan = executedOps(top)
+    val scoring = plan.collect { case p: ProjectExec if holdsNorm(p) => p }
+    assert(scoring.nonEmpty, s"expected a Project computing the norm in:\n${top.queryExecution.executedPlan}")
+    val codegend = plan.collect { case w: WholeStageCodegenExec => stageOps(w.child) }.flatten
+    scoring.foreach(p => assert(codegend.exists(_ eq p),
+      s"scoring Project runs outside whole-stage codegen in:\n${top.queryExecution.executedPlan}"))
+    assert(fallbacks(plan).isEmpty,
+      s"CodegenFallback expressions ${fallbacks(plan)} in:\n${top.queryExecution.executedPlan}")
+    // The query vector adds the same number of expression nodes at any
+    // dimension. Counted on the analyzed plan: the optimizer would fold an
+    // array of 1536 literals into one literal too, but only after every
+    // analysis and optimizer pass before the fold has walked all 1536.
+    def exprNodes(dim: Int): Int =
+      TopK.topK(vectorCorpus, "v", "id", Seq.tabulate(dim)(i => 1.0 / (i + 1)), k = 3)
+        .queryExecution.analyzed.collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(exprNodes(1536) === exprNodes(4))
+  }
+
+  test("knnJoin norm projections hold no CodegenFallback; the corpus vector is copied once per row") {
+    import graft.operators.TopK
+    val corpus  = vectorCorpus.select($"id".as("c_id"), $"v".as("c_v"))
+    val queries = vectorCorpus.filter($"id" < 5).select($"id".as("q_id"), $"v".as("q_v"))
+    val knn = TopK.knnJoin(queries, "q_id", "q_v", corpus, "c_id", "c_v", k = 4)
+    val plan  = executedOps(knn)
+    val norms = plan.collect { case p: ProjectExec if holdsNorm(p) => p }
+    assert(norms.size === 2, s"expected one norm Project per side in:\n${knn.queryExecution.executedPlan}")
+    assert(fallbacks(norms).isEmpty,
+      s"CodegenFallback expressions ${fallbacks(norms)} in:\n${knn.queryExecution.executedPlan}")
+    // the pair loop reads a per-row copy of the corpus vector, not the
+    // scan's columnar batch (decoded again per pair when dictionary-encoded)
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[Slice]))),
+      s"expected the corpus vector copied once per row in:\n${knn.queryExecution.executedPlan}")
+  }
+
+  /** 50 four-dim vectors in parquet: over a local relation the optimizer
+    * would evaluate the projections itself and no ProjectExec would remain. */
+  private lazy val vectorCorpus = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vec_plan").resolve("corpus").toString
+    val rnd = new scala.util.Random(5)
+    (0L until 50L).map(i => (i, Array.fill(4)(rnd.nextGaussian()))).toDF("id", "v")
+      .write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Every operator of `df`'s executed plan, after running it so that the
+    * adaptive plan is final, including those inside query stages. */
+  private def executedOps(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+      case q: QueryStageExec        => q +: ops(q.plan)
+      case _                        => p +: p.children.flatMap(ops)
+    }
+    ops(df.queryExecution.executedPlan)
+  }
+
+  /** The operators of one whole-stage-codegen stage: down to its inputs. */
+  private def stageOps(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case _               => p +: p.children.flatMap(stageOps)
+  }
+
+  private def holdsNorm(p: SparkPlan): Boolean =
+    p.expressions.exists(_.exists(_.isInstanceOf[L2NormSq]))
+
+  private def fallbacks(ops: Seq[SparkPlan]): Seq[String] =
+    ops.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e.prettyName }))
 
   test("capPerKey pre-reduces map-side: WindowGroupLimit before the exchange") {
     import graft.operators.Curation
