@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   * `spark.sql` text as well as the Column API:
   *
   *   SELECT graft_cosine(a, b), graft_dot(a, b),
-  *          graft_sorted_intersect_count(ha, hb), graft_minhash(hs, 32),
-  *          graft_shingle_hashes(text, 3), graft_simhash64(text),
+  *          graft_sorted_intersect_count(ha, hb), graft_shingle_hashes(text, 3),
   *          graft_poly_shingle_hashes(text, 3), graft_poly_minhash(hs, 32),
   *          graft_simhash_poly(text), graft_bpe_count(text),
   *          graft_topk_pairs(score, id, 3) ...
@@ -38,12 +37,8 @@ object GraftFunctions {
       es => { arity("graft_dot", es, 2); DotProduct(es.head, es(1)) }),
     ("graft_sorted_intersect_count", classOf[SortedIntersectionCount],
       es => { arity("graft_sorted_intersect_count", es, 2); SortedIntersectionCount(es.head, es(1)) }),
-    ("graft_minhash", classOf[MinHashSignature],
-      es => { arity("graft_minhash", es, 2); MinHashSignature(es.head, intLit(es(1), "graft_minhash numHashes")) }),
     ("graft_shingle_hashes", classOf[ShingleHashes],
       es => { arity("graft_shingle_hashes", es, 2); ShingleHashes(es.head, intLit(es(1), "graft_shingle_hashes n")) }),
-    ("graft_simhash64", classOf[SimHash64],
-      es => { arity("graft_simhash64", es, 1); SimHash64(es.head) }),
     ("graft_poly_shingle_hashes", classOf[PolyShingleHashes],
       es => { arity("graft_poly_shingle_hashes", es, 2); PolyShingleHashes(es.head, intLit(es(1), "graft_poly_shingle_hashes n")) }),
     ("graft_poly_minhash", classOf[PolyMinHashSignature],

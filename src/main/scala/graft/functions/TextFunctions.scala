@@ -140,12 +140,6 @@ object TextFunctions {
     when(uni > 0, inter / uni).otherwise(lit(0.0))
   }
 
-  /** 64-bit hash per shingle — computed once, then re-hashed cheaply per
-    * MinHash function (strings are hashed exactly once).
-    */
-  def shingleHashes(shingleSet: Column): Column =
-    transform(shingleSet, s => xxhash64(s))
-
   /** Sorted distinct shingle hashes straight from the text, fused into one
     * codegen call ([[graft.functions.expressions.ShingleHashes]]). Values are
     * bit-identical to `sort_array(array_distinct(transform(sequence(…),
@@ -158,25 +152,6 @@ object TextFunctions {
     B.column(ShingleHashes(B.expression(text), n))
   }
 
-  /** MinHash signature: k minima of seeded 64-bit hashes over the shingle set.
-    * Seeding = hashing (seed, shingle-hash) pairs with xxhash64 — long-only
-    * inputs, so the per-function cost is a few ns, not a string hash.
-    * Spark-only (not SQL-oracle-expressible) — the LSH *candidates* are
-    * verified with exact [[jaccard]], which is.
-    */
-  def minhashSignatureFromHashes(hashes: Column, numHashes: Int): Column = {
-    import graft.functions.expressions.MinHashSignature
-    import org.apache.spark.sql.{GraftSqlBridge => B}
-    B.column(MinHashSignature(B.expression(hashes), numHashes))
-  }
-
-  def minhashSignature(shingleSet: Column, numHashes: Int): Column =
-    // graft_minhash rejects nullable array elements at analysis; a coalesce
-    // inside the transform makes the element type provably non-null (null
-    // shingles cannot occur — the sentinel only exists to fix the type)
-    minhashSignatureFromHashes(
-      transform(shingleHashes(shingleSet), h => coalesce(h, lit(Long.MinValue))), numHashes)
-
   /** Unicode NFC normalization (UAX #15) as a codegen'd scalar
     * ([[graft.functions.expressions.NfcNormalize]]) — the canonicalization
     * byte-exact dedup needs before hashing: precomposed and
@@ -188,39 +163,6 @@ object TextFunctions {
     import graft.functions.expressions.NfcNormalize
     import org.apache.spark.sql.{GraftSqlBridge => B}
     B.column(NfcNormalize(B.expression(text)))
-  }
-
-  /** 64-bit SimHash over tokens: per-bit majority vote of token hashes,
-    * fused into one codegen call ([[graft.functions.expressions.SimHash64]]).
-    * Bit-identical to [[simhash64Hof]] (asserted in tests) at ~50× less
-    * per-row work.
-    */
-  def simhash64(text: Column): Column = {
-    import graft.functions.expressions.SimHash64
-    import org.apache.spark.sql.{GraftSqlBridge => B}
-    B.column(SimHash64(B.expression(text)))
-  }
-
-  /** Reference HOF formulation of [[simhash64]] — kept as the spec the fused
-    * kernel is tested against. Tokens are hashed ONCE up front (`transform`)
-    * and the aggregate runs over the hash array — HOF lambda bodies
-    * re-evaluate per element, so hashing inside the per-bit lambda would
-    * string-hash each token 64×.
-    */
-  def simhash64Hof(text: Column): Column = {
-    val tokenHashes = transform(tokens(text), t => xxhash64(t))
-    val counters = aggregate(
-      tokenHashes,
-      array_repeat(lit(0), 64),
-      (acc, h) =>
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (c, i) => c + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-    )
-    aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)),
-        (c, i) => when(c > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc.bitwiseOR(b)
-    )
   }
 
   /** Hamming distance between two 64-bit simhashes. */
@@ -239,10 +181,10 @@ object TextFunctions {
   }
 
   // ---- SQL-expressible (oracle-checkable) dedup hash family ----
-  // Same pipeline shapes as the xxhash64 kernels above, but every hash is
-  // modular arithmetic below 2⁶³ (PolyHash), so the DuckDB oracle computes
-  // bit-identical values — this is what makes q22b/q22c/q45 hash-checkable
-  // rather than rows-only. Fused kernels: one codegen call per row.
+  // Every hash is modular arithmetic below 2⁶³ (PolyHash), so the DuckDB
+  // oracle computes bit-identical values — this is what makes q22b/q22c/q45
+  // hash-checkable rather than rows-only. Fused kernels: one codegen call
+  // per row.
 
   /** Sorted distinct n-gram shingle hashes, polynomial family
     * ([[graft.functions.expressions.PolyShingleHashes]]).

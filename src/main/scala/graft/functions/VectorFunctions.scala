@@ -28,11 +28,12 @@ object VectorFunctions {
   /** Cast an array column to array<double> for numerically stable math. */
   def asDouble(a: Column): Column = a.cast("array<double>")
 
-  /** Fused single-pass dot product (native codegen Expression — no
-    * intermediate array per pair, unlike the HOF form `aggregate(zip_with)`,
-    * to which it is bit-identical).
+  /** Sequential left-to-right dot product — deterministic accumulation order
+    * (matters for float-exact oracle comparison). A fused single-pass native
+    * codegen Expression: no intermediate array per pair, unlike the HOF form
+    * `aggregate(zip_with)`, to which it is bit-identical.
     */
-  def dotFused(a: Column, b: Column): Column =
+  def dot(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(
       ExpressionUtils.expression(asDouble(a)), ExpressionUtils.expression(asDouble(b))))
 
@@ -51,17 +52,12 @@ object VectorFunctions {
     ExpressionUtils.column(graft.functions.expressions.MatVecMul(
       ExpressionUtils.expression(asDouble(v)), mat))
 
-  /** Fused single-pass cosine (native codegen Expression): one sequential
-    * loop, `dot/(sqrt(na)*sqrt(nb))`; zero norm => null.
+  /** Cosine similarity in [-1, 1]; zero norm => null. A fused single-pass
+    * native codegen Expression: one sequential loop, `dot/(sqrt(na)*sqrt(nb))`.
     */
-  def cosineFused(a: Column, b: Column): Column =
+  def cosine(a: Column, b: Column): Column =
     ExpressionUtils.column(CosineSimilarity(
       ExpressionUtils.expression(asDouble(a)), ExpressionUtils.expression(asDouble(b))))
-
-  /** Sequential left-to-right dot product — deterministic accumulation order
-    * (matters for float-exact oracle comparison). The [[dotFused]] kernel.
-    */
-  def dot(a: Column, b: Column): Column = dotFused(a, b)
 
   /** Squared L2 norm, a sequential left-to-right sum of squares (native
     * codegen kernel [[graft.functions.expressions.L2NormSq]]).
@@ -71,11 +67,6 @@ object VectorFunctions {
 
   def l2Norm(a: Column): Column = sqrt(l2NormSq(a))
 
-  /** Cosine similarity in [-1, 1]; zero norm => null. The [[cosineFused]]
-    * kernel.
-    */
-  def cosine(a: Column, b: Column): Column = cosineFused(a, b)
-
   /** Pairwise cosine from precomputed squared norms — identical arithmetic to
     * [[cosine]] (`dot / (sqrt(nsqA) * sqrt(nsqB))`, same op order, so results
     * are bit-identical), but the O(dim) norm reductions run once per row
@@ -84,7 +75,7 @@ object VectorFunctions {
     */
   def cosineFromNormSq(a: Column, b: Column, nsqA: Column, nsqB: Column): Column = {
     val np = sqrt(nsqA) * sqrt(nsqB)
-    when(np =!= 0.0, dotFused(a, b) / np)
+    when(np =!= 0.0, dot(a, b) / np)
   }
 
   def euclidean(a: Column, b: Column): Column = {

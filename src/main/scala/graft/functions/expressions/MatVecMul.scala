@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * fold of v(i)·mat(j)(i) — exactly [[DotProduct]]'s accumulation, which is
   * also DuckDB `list_inner_product`'s.
   *
-  * Null semantics, matching `transform(…, j -> dotFused(v, row_j))`
+  * Null semantics, matching `transform(…, j -> dot(v, row_j))`
   * element-for-element: null input vector ⇒ null result; a null element in
   * the vector, or a vector whose length differs from a row's, ⇒ that output
   * element is null (all of them, since every row has the same length).

@@ -7,11 +7,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** k-function MinHash signature via the classic affine family
-  * `h_j(x) = (a_j·x + b_j) mod P` (Carter–Wegman universal hashing) — the
-  * SQL-expressible sibling of [[MinHashSignature]] (splitmix64). With element
-  * hashes < P (guaranteed by [[PolyShingleHashes]]; defensively re-reduced
-  * here) every intermediate stays < P² ≈ 10¹⁸ < 2⁶³, so DuckDB computes the
-  * identical signature:
+  * `h_j(x) = (a_j·x + b_j) mod P` (Carter–Wegman universal hashing),
+  * expressible in SQL. With element hashes < P (guaranteed by
+  * [[PolyShingleHashes]]; defensively re-reduced here) every intermediate
+  * stays < P² ≈ 10¹⁸ < 2⁶³, so DuckDB computes the identical signature:
   *
   * {{{
   * list_transform(generate_series(0, k-1), j ->
@@ -22,8 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * j, mirrored literally in the oracle SQL.
   *
   * Rejects `containsNull` element types outright: a null slot would read
-  * undefined memory through the primitive accessor (same hardening applied to
-  * [[MinHashSignature]]).
+  * undefined memory through the primitive accessor.
   */
 case class PolyMinHashSignature(child: Expression, numHashes: Int) extends UnaryExpression {
   require(numHashes > 0, s"numHashes must be positive, got $numHashes")

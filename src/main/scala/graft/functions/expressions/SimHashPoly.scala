@@ -7,9 +7,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 60-bit SimHash (Charikar, STOC 2002) — the SQL-expressible sibling of
-  * [[SimHash64]]: token hash is the [[PolyHash]] code-point polynomial and
-  * bit j's ±1 vote is the parity of the affine rehash
+/** 60-bit SimHash (Charikar, STOC 2002), expressible in SQL: token hash
+  * is the [[PolyHash]] code-point polynomial and bit j's ±1 vote is the
+  * parity of the affine rehash
   * `((a_j·th + b_j) mod P) mod 2` — every intermediate < P² < 2⁶³, so DuckDB
   * reproduces the signature exactly (unnest tokens × generate_series(0,59),
   * group-by vote, then sum of `1 << j` where the vote is positive).
@@ -17,11 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * 60 bits, not 64, so `1 << j` never touches the sign bit in either engine
   * (DuckDB BIGINT shift overflow vs Java wrap would otherwise diverge at
   * j = 63). Candidate banding uses 4×15-bit chunks — guaranteed recall for
-  * hamming distance ≤ 3, heuristic beyond, same structure as the 64-bit
-  * variant's 4×16.
+  * hamming distance ≤ 3, heuristic beyond.
   *
-  * Tie (vote sum 0) votes 0, matching [[SimHash64]] and the oracle's
-  * `CASE WHEN v > 0`.
+  * Tie (vote sum 0) votes 0, matching the oracle's `CASE WHEN v > 0`.
   */
 case class SimHashPoly(child: Expression) extends UnaryExpression {
 

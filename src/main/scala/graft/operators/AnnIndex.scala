@@ -107,8 +107,7 @@ object AnnIndex {
   def bucketCol(vec: Column, planes: Seq[Seq[Double]]): Column = {
     val vd = asDouble(vec)
     planes.zipWithIndex.map { case (p, i) =>
-      val pl = array(p.map(lit): _*)
-      when(dotFused(vd, pl) >= 0.0, shiftleft(lit(1L), i)).otherwise(lit(0L))
+      when(dot(vd, TopK.vecLit(p)) >= 0.0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
   }
 
@@ -590,7 +589,6 @@ object AnnIndex {
                      params: Array[(Double, Double)],
                      coarseCentroids: Array[Seq[Double]],
                      roundTo: Int = 6, excludeSelf: Boolean = true): DataFrame = {
-    import graft.functions.VectorFunctions.dotFused
     require(nprobe <= nlist, "nprobe must be <= nlist")
     val cents = coarseCentroids.map(_.toArray)
     val mnA = array(params.map(p => lit(p._1)): _*)
@@ -613,7 +611,7 @@ object AnnIndex {
     val scored = enc.join(broadcast(qb), Seq("__cell"))
       .filter(lit(!excludeSelf) || col(qIdCol) =!= col(cIdCol))
       .withColumn("score", floorRound(
-        col("__q2") + col("__x2") - lit(2.0) * dotFused(col("__qv"), col("__xhat")), roundTo))
+        col("__q2") + col("__x2") - lit(2.0) * dot(col("__qv"), col("__xhat")), roundTo))
     val w = Window.partitionBy(col(qIdCol)).orderBy(col("score"), col(cIdCol))
     scored.withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
@@ -645,7 +643,6 @@ object AnnIndex {
                     params: Array[(Double, Double)],
                     coarseCentroids: Option[Array[Seq[Double]]] = None,
                     roundTo: Int = 6, excludeSelf: Boolean = true): DataFrame = {
-    import graft.functions.VectorFunctions.dotFused
     require(nprobe <= nlist, "nprobe must be <= nlist")
     val cents: Array[Array[Double]] = coarseCentroids
       .map(_.map(_.toArray).toArray)
@@ -668,7 +665,7 @@ object AnnIndex {
     enc.join(broadcast(qb), Seq("__cell"))
       .filter(lit(!excludeSelf) || col(qIdCol) =!= col(cIdCol))
       .withColumn("score", floorRound(
-        col("__q2") + col("__x2") - lit(2.0) * dotFused(col("__qv"), col("__xhat")), roundTo))
+        col("__q2") + col("__x2") - lit(2.0) * dot(col("__qv"), col("__xhat")), roundTo))
       .select(col(qIdCol), col(cIdCol), col("score"), col("__probe_rn").as("probe_rn"))
   }
 
@@ -739,7 +736,6 @@ object AnnIndex {
       rotation: Option[Array[Array[Double]]] = None,
       encoded: Option[DataFrame] = None)
       : (DataFrame, (DataFrame, String, String) => DataFrame, Column) = {
-    import graft.functions.VectorFunctions.{dotFused, matVec}
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     require(nprobe <= nlist, "nprobe must be <= nlist")
     require(rotation.forall(r => r.length == dim && r.forall(_.length == dim)),
@@ -929,7 +925,7 @@ object AnnIndex {
                              outDim: Int, roundTo: Int): Seq[Column] =
     planes.map { p =>
       val norm = math.sqrt(p.map(x => x * x).sum) * math.sqrt(outDim.toDouble)
-      floorRound(dotFused(vd, array(p.map(lit): _*)) / lit(norm), roundTo)
+      floorRound(dot(vd, TopK.vecLit(p)) / lit(norm), roundTo)
     }
 
   /** Near-duplicate pairs by embedding cosine >= threshold, LSH-bucketed

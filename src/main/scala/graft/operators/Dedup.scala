@@ -30,9 +30,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Hash family: every hash here is the SQL-expressible [[PolyHash]] modular
   * family (token/shingle polynomial, affine minhash, parity-vote simhash), so
   * the ENTIRE pipeline — candidates included — is mirrored in the DuckDB
-  * oracles of q22b/q22c/q45. The xxhash64 kernels (ShingleHashes /
-  * MinHashSignature / SimHash64) remain available as an alternative family
-  * with 64-bit collision resistance.
+  * oracles of q22b/q22c/q45.
   */
 object Dedup {
 
@@ -792,7 +790,7 @@ object Dedup {
                              embDim: Int, k: Int,
                              cosThreshold: Double,
                              stratifiedInit: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.{asDouble, dotFused, l2NormSq}
+    import graft.functions.VectorFunctions.{asDouble, dot, l2NormSq}
     require(k > 0, s"k must be positive, got $k")
     require(cosThreshold > 0 && cosThreshold <= 1.0,
       s"cosThreshold must be in (0, 1], got $cosThreshold")
@@ -825,7 +823,7 @@ object Dedup {
     // literals (r16 verdict item 2: at dim=1536 the literal form recreates
     // the plan-size defect SrpBandBuckets fixed) — min(struct(d, i)) over
     // the k joined rows is the same lexicographic argmin as array_min over
-    // a struct array, and dotFused on the joined centroid column runs the
+    // a struct array, and dot on the joined centroid column runs the
     // identical fused kernel on the identical doubles, so assignments (and
     // the q243 hash) are unchanged.
     val sess = repVecs.sparkSession
@@ -835,7 +833,7 @@ object Dedup {
       .toDF("__ci", "__cv", "__c2"))
     val assignedIds = repVecs.crossJoin(centRel)
       .select(col(idCol), struct(
-        (col("__c2") - lit(2.0) * dotFused(col("__v"), col("__cv"))).as("d"),
+        (col("__c2") - lit(2.0) * dot(col("__v"), col("__cv"))).as("d"),
         col("__ci").as("i")).as("__s"))
       .groupBy(col(idCol)).agg(min(col("__s")).as("__m"))
       .select(col(idCol), col("__m.i").as("__cell"))
@@ -1425,18 +1423,18 @@ object Dedup {
   def semDeDup(df: DataFrame, idCol: String, vecCol: String,
                centroids: Seq[Seq[Double]], tau: Double,
                roundTo: Int = 6): DataFrame = {
-    import graft.functions.VectorFunctions.{asDouble, cosineFromNormSq, cosineFused, l2NormSq}
+    import graft.functions.VectorFunctions.{asDouble, cosineFromNormSq, cosine, l2NormSq}
     // cell argmin + centroid lookup as kernel nodes, not nlist·dim literals
     // (see AnnIndex.argminCell — the r17 plan-size fix)
     val mat = AnnIndex.centMat(centroids)
     // norms once per ROW, not per pair (cosineFromNormSq is bit-identical
-    // to cosineFused, so the saving never moves a decision boundary)
+    // to cosine, so the saving never moves a decision boundary)
     val assigned = df
       .select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
       .withColumn("cell", AnnIndex.argminCell(col("v"), mat).cast("long"))
       .withColumn("nsq", l2NormSq(col("v")))
       .withColumn("cent_sim", floorRound(
-        cosineFused(col("v"), AnnIndex.centroidOf(col("cell").cast("int"), mat)), roundTo))
+        cosine(col("v"), AnnIndex.centroidOf(col("cell").cast("int"), mat)), roundTo))
       .cache() // cache-lifetime: both pair sides + the final left join read
                // the k-way argmin assignment; see Caching
     val a = assigned.select(col("cell"), col("id").as("id_a"), col("v").as("v_a"),

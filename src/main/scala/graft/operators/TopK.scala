@@ -43,7 +43,7 @@ object TopK {
     val qNorm = math.sqrt(query.map(x => x * x).sum)
     val score = {
       val np = sqrt(l2NormSq(col(vecCol))) * lit(qNorm)
-      when(np =!= 0.0, dotFused(col(vecCol), vecLit(query)) / np)
+      when(np =!= 0.0, dot(col(vecCol), vecLit(query)) / np)
     }
     corpus
       .withColumn("score", floorRound(score, roundTo))

@@ -62,16 +62,7 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     val spark = vectors.sparkSession
     val p     = new Path(path)
     val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // refuse to mix embedder generations: vectors hashed by a different
-    // function would cohabit one metric space and return garbage neighbors
-    // with no error anywhere downstream
-    embedderId.foreach { eid =>
-      storedEmbedderId(fs).foreach { stored =>
-        require(stored == eid,
-          s"vector index at $path was built by embedder '$stored' but this write uses '$eid'; " +
-            "rebuild the index (delete it) or keep the original embedder")
-      }
-    }
+    requireSameEmbedder(fs)
     val valid  = vectors.filter(size(col("embedding")) === dim)
     val merged = Upsert.merge(read(spark), valid.select("id", "embedding", "metadata", "version"),
       Seq("id"), "version")
@@ -91,8 +82,22 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     val p     = new Path(path)
     val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return // nothing indexed — nothing to erase
+    requireSameEmbedder(fs)
     writeSwapped(spark, fs, p, erase(read(spark), ids))
   }
+
+  // refuse to mix embedder generations: vectors hashed by a different
+  // function would cohabit one metric space and return garbage neighbors
+  // with no error anywhere downstream. Every write checks, deletes too:
+  // the swap stamps this writer's id over the stored marker.
+  private def requireSameEmbedder(fs: org.apache.hadoop.fs.FileSystem): Unit =
+    embedderId.foreach { eid =>
+      storedEmbedderId(fs).foreach { stored =>
+        require(stored == eid,
+          s"vector index at $path was built by embedder '$stored' but this write uses '$eid'; " +
+            "rebuild the index (delete it) or keep the original embedder")
+      }
+    }
 
   private def erase(rows: DataFrame, ids: DataFrame): DataFrame =
     rows.join(ids.select("id"), Seq("id"), "left_anti")

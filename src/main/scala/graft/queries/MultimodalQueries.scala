@@ -443,7 +443,7 @@ object MultimodalQueries {
       (s, dir) => {
         import graft.functions.MathFunctions.floorRound
         import graft.functions.TextFunctions.hamming64
-        import graft.functions.VectorFunctions.cosineFused
+        import graft.functions.VectorFunctions.cosine
         import org.apache.spark.sql.expressions.Window
         val emb = graft.pipeline.HashingEmbedder(64)
         val docs = Tables.documents(s, dir)
@@ -456,7 +456,7 @@ object MultimodalQueries {
           col("doc_id").as("cdoc"), emb.embedRaw(col("text")).as("cv"))
         val w = Window.partitionBy("q_id").orderBy(desc("score"), col("media_id"))
         val hits = cap.join(broadcast(qs), col("cdoc") =!= col("q_id"))
-          .withColumn("score", floorRound(cosineFused(col("cv"), col("qv")), 6))
+          .withColumn("score", floorRound(cosine(col("cv"), col("qv")), 6))
           .filter(col("score").isNotNull)
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 3)

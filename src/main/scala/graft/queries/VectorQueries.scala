@@ -1042,7 +1042,7 @@ object VectorQueries {
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val truth = c.join(broadcast(q), col("q_id") =!= col("c_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
           .select("q_id", "c_id")
         graft.operators.Retrieval.rankingEval(sys, truth, "q_id", "c_id", "rn", k = 3)
@@ -1488,7 +1488,7 @@ object VectorQueries {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         def exactD2(df: org.apache.spark.sql.DataFrame) = df.withColumn("d2",
-          fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+          fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
         val rrHits = exactD2(short.select("q_id", "c_id")
             .join(c, Seq("c_id")).join(broadcast(q), Seq("q_id")))
           .withColumn("rr", row_number().over(w))
@@ -1601,7 +1601,7 @@ object VectorQueries {
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val exact = c.join(broadcast(q), col("q_id") =!= col("c_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .select("q_id", "c_id")
@@ -1850,7 +1850,7 @@ object VectorQueries {
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val exact = c.join(broadcast(q), col("q_id") =!= col("c_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .select("q_id", "c_id")
@@ -1964,7 +1964,7 @@ object VectorQueries {
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val exact = c.join(broadcast(q), col("q_id") =!= col("c_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 10)
           .select("q_id", "c_id")
@@ -2162,7 +2162,7 @@ object VectorQueries {
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val exact = c.join(broadcast(q), col("q_id") =!= col("c_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(we))
           .filter(col("rn") <= 3)
           .select("q_id", "c_id")
@@ -2429,14 +2429,14 @@ object VectorQueries {
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val rr3 = short10.join(c, Seq("c_id")).join(broadcast(q), Seq("q_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(wr))
           .filter(col("rn") <= 3).select("q_id", "c_id")
         val we = org.apache.spark.sql.expressions.Window
           .partitionBy("q_id").orderBy(col("d2"), col("c_id"))
         val exact = c.join(broadcast(q), col("q_id") =!= col("c_id"))
           .withColumn("d2",
-            fr(col("__q2") + col("__c2") - lit(2.0) * dotFused(col("qv"), col("cv")), 6))
+            fr(col("__q2") + col("__c2") - lit(2.0) * dot(col("qv"), col("cv")), 6))
           .withColumn("rn", row_number().over(we))
           .filter(col("rn") <= 3)
           .select("q_id", "c_id")
@@ -2847,7 +2847,6 @@ object VectorQueries {
     "q280_migration_ab_recall_gate" -> Q(
       (s, dir) => {
         import graft.functions.MathFunctions.floorRound
-        import graft.functions.VectorFunctions.{dotFused, l2NormSq}
         import org.apache.spark.sql.expressions.Window
         val cf = clusteredDf(s, dir)
         val (root, staleCents) = pqEncPartitioned(s, dir, "pq_enc_raw_cf_part_ab_v1")
@@ -2867,7 +2866,7 @@ object VectorQueries {
         val truth = queries.crossJoin(drifted)
           .filter(col("vec_id") =!= col("q_id"))
           .withColumn("__d", l2NormSq(col("qv")) + l2NormSq(col("cvec"))
-            - lit(2.0) * dotFused(col("qv"), col("cvec")))
+            - lit(2.0) * dot(col("qv"), col("cvec")))
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("__d"), col("vec_id"))))
           .filter(col("rn") <= 10)
@@ -3183,7 +3182,6 @@ object VectorQueries {
     "q291_sq8_migration_ab_gate" -> Q(
       (s, dir) => {
         import graft.functions.MathFunctions.floorRound
-        import graft.functions.VectorFunctions.{dotFused, l2NormSq}
         import org.apache.spark.sql.expressions.Window
         val cf = clusteredDf(s, dir)
         val (root, staleCents) = sq8EncPartitioned(s, dir, "sq8_enc_cf_part_ab_v1")
@@ -3202,7 +3200,7 @@ object VectorQueries {
         val truth = queries.crossJoin(drifted)
           .filter(col("vec_id") =!= col("q_id"))
           .withColumn("__d", l2NormSq(col("qv")) + l2NormSq(col("cvec"))
-            - lit(2.0) * dotFused(col("qv"), col("cvec")))
+            - lit(2.0) * dot(col("qv"), col("cvec")))
           .withColumn("rn", row_number().over(
             Window.partitionBy("q_id").orderBy(col("__d"), col("vec_id"))))
           .filter(col("rn") <= 10)
@@ -3231,7 +3229,7 @@ object VectorQueries {
             .filter(col("vec_id") =!= col("q_id"))
             .join(qvn, "q_id")
             .withColumn("__dist", floorRound(
-              col("__q2") + col("__x2") - lit(2.0) * dotFused(col("__qv"), col("__xh")), 6))
+              col("__q2") + col("__x2") - lit(2.0) * dot(col("__qv"), col("__xh")), 6))
             .withColumn("rn", row_number().over(
               Window.partitionBy("q_id").orderBy(col("__dist"), col("vec_id"))))
             .filter(col("rn") <= 10)

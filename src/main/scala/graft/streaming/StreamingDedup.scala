@@ -332,7 +332,7 @@ object StreamingDedup {
                               cosThreshold: Double = 0.95,
                               hitsName: String = "semcell_hits_stream_d64_k16_b16_c095_v1")
       : DataFrame = {
-    import graft.functions.VectorFunctions.{cosineFromNormSq, dotFused, l2NormSq}
+    import graft.functions.VectorFunctions.{cosineFromNormSq, l2NormSq}
     import graft.operators.AnnIndex
     import graft.pipeline.ArtifactStore
     import org.apache.spark.sql.streaming.Trigger
@@ -349,14 +349,9 @@ object StreamingDedup {
     val hitsRoot = ArtifactStore.rootFor(dir, hitsName)
 
     // map-side cell assignment for ARRIVING rows: argmin over the k trained
-    // centroids as an expression (no aggregate — streaming plans stay
-    // stateless); k·dim literals, bounded by the trained cell count
-    def cellOf(vec: org.apache.spark.sql.Column) = array_min(array(
-      cents.zipWithIndex.map { case (c, i) =>
-        val c2 = c.map(x => x * x).sum
-        struct((lit(c2) - lit(2.0) * dotFused(vec, array(c.map(lit): _*))).as("d"),
-          lit(i).as("i"))
-      }: _*)).getField("i").cast("long")
+    // centroids as one kernel node (no aggregate — streaming plans stay
+    // stateless, and the re-plan per micro-batch carries no centroid literals)
+    val centMat = AnnIndex.centMat(cents)
 
     // seed the ingest: one single-part file per planned batch (doc_id % 2)
     val seedRoot = java.nio.file.Files.createTempDirectory("graft_stream_semcell")
@@ -389,7 +384,7 @@ object StreamingDedup {
             // probe the standing index within the cell, keep-first order
             val semHits = batch
               .select(col("doc_id").as("id_b"), emb.embedRaw(col("text")).as("v_b"))
-              .withColumn("cell", cellOf(col("v_b")))
+              .withColumn("cell", AnnIndex.argminCell(col("v_b"), centMat).cast("long"))
               .join(broadcast(mu), Seq("cell"))
               .withColumn("__nsq_b", l2NormSq(col("v_b")))
               .select(col("id_b"), col("cell"), col("v_b"), col("__nsq_b"),

@@ -254,20 +254,14 @@ object StreamingDrift {
                              vecExpr: String, nextFilter: String,
                              cents: Seq[Seq[Double]], prevCounts: DataFrame,
                              threshold: Double = 0.25): DataFrame = {
-    import graft.functions.VectorFunctions.{asDouble, dotFused}
-    def cellOf(vec: org.apache.spark.sql.Column) =
-      array_min(array(cents.zipWithIndex.map { case (c, i) =>
-        val c2 = c.map(x => x * x).sum
-        struct((lit(c2) - lit(2.0) * dotFused(vec, array(c.map(lit): _*))).as("d"),
-          lit(i).as("i"))
-      }: _*)).getField("i").cast("long")
+    import graft.operators.AnnIndex
     val streamed = spark.readStream
       .schema(spark.read.parquet(s"$dir/embeddings.parquet").schema)
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
       .filter(expr(nextFilter))
     val nextCounts = streamed
-      .select(cellOf(asDouble(expr(vecExpr))).as("bin"))
+      .select(AnnIndex.argminCell(expr(vecExpr), AnnIndex.centMat(cents)).cast("long").as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("n"))
     val drained = StreamingAgg.drain(nextCounts, "graft_stream_celldrift", "complete")
     Validate.psiGateFromCounts(prevCounts, drained, threshold)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.VectorFunctions.dotFused
+import graft.functions.VectorFunctions.dot
 import graft.operators.AnnIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
@@ -32,7 +32,7 @@ class CentroidKernelSpec extends AnyFunSuite with SparkTestSession {
   private def cellScoresLit(vec: Column): Column =
     array(cents.toSeq.zipWithIndex.map { case (c, i) =>
       val c2 = c.map(x => x * x).sum
-      struct((lit(c2) - lit(2.0) * dotFused(vec, array(c.toSeq.map(lit): _*))).as("d"),
+      struct((lit(c2) - lit(2.0) * dot(vec, array(c.toSeq.map(lit): _*))).as("d"),
         lit(i).as("i"))
     }: _*)
 

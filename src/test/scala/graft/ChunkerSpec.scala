@@ -33,7 +33,7 @@ class ChunkerSpec extends AnyFunSuite with SparkTestSession {
       import graft.functions.VectorFunctions._
       val scores = array(cents.toSeq.map { c =>
         val c2 = c.map(x => x * x).sum
-        lit(c2) - lit(2.0) * dotFused(asDouble(col("embedding")), array(c.map(lit): _*))
+        lit(c2) - lit(2.0) * dot(asDouble(col("embedding")), array(c.map(lit): _*))
       }: _*)
       emb.select((array_min(scores) + l2NormSq(col("embedding"))).as("d2"))
         .agg(avg("d2")).head().getDouble(0)

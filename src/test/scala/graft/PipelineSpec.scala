@@ -145,6 +145,27 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(e2.getMessage.contains("embedder-v1"))
   }
 
+  test("VectorIndex refuses deletes from a different embedder generation") {
+    val dir = Files.createTempDirectory("graft_index_d").resolve("index").toString
+    val rows = Seq(("a", Seq(1.0, 0.0), Map.empty[String, String], 1L),
+        ("b", Seq(0.0, 1.0), Map.empty[String, String], 1L))
+      .toDF("id", "embedding", "metadata", "version")
+    val v1 = new VectorIndex(dir, 2, Some("embedder-v1"))
+    v1.upsert(rows)
+    val e = intercept[IllegalArgumentException] {
+      new VectorIndex(dir, 2, Some("embedder-v2")).delete(Seq("a").toDF("id"))
+    }
+    assert(e.getMessage.contains("embedder-v1"))
+    // nothing was written: the marker still reads v1 and both rows remain,
+    // so a later v2 upsert is still refused
+    val marker = Files.readString(java.nio.file.Paths.get(dir, "_graft_embedder"))
+    assert(marker === "embedder-v1")
+    assert(v1.read(spark).select("id").as[String].collect().sorted.toSeq === Seq("a", "b"))
+    intercept[IllegalArgumentException] {
+      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows)
+    }
+  }
+
   test("Sync end-to-end: full index, empty re-run, single-file re-index, dry run") {
     val root   = mkCorpus()
     val state  = Files.createTempDirectory("graft_s").resolve("state").toString
