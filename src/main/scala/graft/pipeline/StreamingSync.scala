@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSession
 
@@ -49,24 +48,18 @@ final class StreamingSync(
         unix_timestamp(col("modificationTime")).as("mtime"),
         decode(col("content"), "UTF-8").as("text"))
 
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val ok = batch
-          .withColumn("n_tokens", graft.functions.TextFunctions.tokenCount(col("text")))
-          .filter(col("n_tokens") < maxTokens)
-        val vectors = ok.select(
-          col("path").as("id"),
-          embedder.embed(col("text")).as("embedding"),
-          map().cast("map<string,string>").as("metadata"),
-          col("mtime").as("version"))
-        index.upsert(vectors)
-        batches += 1
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    graft.streaming.StreamingAgg.drainEach(stream, Some(checkpointDir)) { (batch, _) =>
+      val ok = batch
+        .withColumn("n_tokens", graft.functions.TextFunctions.tokenCount(col("text")))
+        .filter(col("n_tokens") < maxTokens)
+      val vectors = ok.select(
+        col("path").as("id"),
+        embedder.embed(col("text")).as("embedding"),
+        map().cast("map<string,string>").as("metadata"),
+        col("mtime").as("version"))
+      index.upsert(vectors)
+      batches += 1
+    }
     batches
   }
 }

@@ -94,11 +94,7 @@ object Sessionize {
     // format in the session timezone so output strings match batch()'s
     // date_format regardless of spark.sql.session.timeZone
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val reader = spark.readStream
-      .schema(spark.read.parquet(schemaFrom).schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val raw = reader.parquet(dir)
+    val raw = StreamingAgg.streamTable(spark, dir, glob, Some(schemaFrom), maxFilesPerTrigger)
     // normalize ts exactly like Tables.events (long nanos OR NTZ micros)
     val ev = graft.Tables.normalizeTs(raw)
       .select(col("user_id"), col("ts"), col("event_id")).as[SessionEvent]
@@ -200,11 +196,7 @@ object Sessionize {
     * demonstrates event-time windows + watermark on the file source.
     */
   def windowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.readStream
-      .schema(spark.read.parquet(s"$dir/orders.parquet").schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(dir)
-    val agg = raw
+    val agg = StreamingAgg.streamTable(spark, dir, "orders.parquet")
       // parquet ms timestamps read as NTZ; watermarks require TIMESTAMP_LTZ
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
       .withWatermark("o_orderdate", "1 day")

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.MathFunctions.floorRound
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -16,17 +16,26 @@ import java.util.concurrent.atomic.AtomicInteger
 object StreamingAgg {
   private val counter = new AtomicInteger(0)
 
-  /** One fixture table as a file-source stream (schema probed from the same
-    * parquet — streaming sources need an explicit schema).
+  /** The parquet files of `dir` matching `glob` as a file-source stream
+    * (schema probed from `schemaFrom` — streaming sources need an explicit
+    * schema). `maxFilesPerTrigger` forces one micro-batch per file group,
+    * which is how the specs split a fixture across batches.
     */
-  private[streaming] def streamTable(spark: SparkSession, dir: String, file: String): DataFrame =
-    spark.readStream
-      .schema(spark.read.parquet(s"$dir/$file").schema)
-      .option("pathGlobFilter", file)
+  private[graft] def streamTable(spark: SparkSession, dir: String, glob: String,
+                                 schemaFrom: Option[String] = None,
+                                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream
+      .schema(spark.read.parquet(schemaFrom.getOrElse(s"$dir/$glob")).schema)
+      .option("pathGlobFilter", glob)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
       .parquet(dir)
+  }
 
-  /** Drain a streaming frame synchronously through a memory sink with
-    * AvailableNow; returns the drained table.
+  /** Drain a streaming frame synchronously with AvailableNow; returns the
+    * drained rows. The default sink is memory: its session view is dropped
+    * once the returned frame has resolved it, so a drain leaves nothing in
+    * the catalog. `fileSink` (output dir, checkpoint dir) writes parquet
+    * instead — the form that can resume from its checkpoint across runs.
     *
     * `statePartitions` sizes the state stores: a stateful streaming query
     * pins its state partitioning to `spark.sql.shuffle.partitions` AT FIRST
@@ -36,31 +45,75 @@ object StreamingAgg {
     * default: the fixtures hold thousands of keys, where 8 stores cut the
     * q63 stream-stream join from 4.2 s to 1.8 s with identical results. A
     * real deployment with billions of keys raises it; the setting is
-    * per-query (restored after the drain), so batch plans are untouched.
+    * per-query (restored after the drain, also when it fails), so batch
+    * plans are untouched.
     */
   // serializes the set→start→drain→restore window below: interleaved drains
   // would otherwise read each other's overridden value as the "default" and
   // leave the session conf permanently clobbered
   private val drainLock = new Object
 
-  private[streaming] def drain(df: DataFrame, prefix: String, mode: String,
-                               statePartitions: Int = 8): DataFrame = {
+  private[graft] def drain(df: DataFrame, prefix: String, mode: String,
+                           statePartitions: Int = 8,
+                           fileSink: Option[(String, String)] = None): DataFrame = {
     val spark = df.sparkSession
     val name = s"${prefix}_${counter.incrementAndGet()}"
-    drainLock.synchronized {
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-      try {
-        val q = df.writeStream
-          .outputMode(mode)
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val writer = df.writeStream.outputMode(mode).trigger(Trigger.AvailableNow())
+    val sink = fileSink match {
+      case None => writer.format("memory").queryName(name)
+      case Some((outDir, ckpt)) =>
+        writer.format("parquet").option("path", outDir).option("checkpointLocation", ckpt)
     }
-    df.sparkSession.table(name)
+    try {
+      drainLock.synchronized {
+        val before = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+        try sink.start().awaitTermination()
+        finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      }
+      fileSink.fold(spark.table(name)) { case (outDir, _) => spark.read.parquet(outDir) }
+    } finally if (fileSink.isEmpty) spark.catalog.dropTempView(name)
+  }
+
+  /** Run `onBatch(batch, batchId)` on every micro-batch of `stream` under
+    * AvailableNow and return once all currently available input is
+    * processed. `foreachBatch` is at-least-once without a checkpoint, so a
+    * body must be idempotent per batch (content keys or a batchId guard).
+    */
+  private[graft] def drainEach(stream: DataFrame, checkpoint: Option[String] = None)(
+      onBatch: (DataFrame, Long) => Unit): Unit = {
+    val writer = stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) => onBatch(batch, batchId) }
+      .trigger(Trigger.AvailableNow())
+    checkpoint.fold(writer)(writer.option("checkpointLocation", _))
+      .start().awaitTermination()
+  }
+
+  /** Stream `df` as one micro-batch per distinct non-empty `batchOf` value
+    * and run `onBatch` on each. The seed is ONE partitioned write under a
+    * `prefix` temp root: hash-repartitioning on the batch key lands each key
+    * in exactly one task, so `partitionBy` emits exactly one file per key
+    * and none for an empty key — no micro-batch is empty. The root is
+    * deleted when the drain ends, also when a batch body throws. Callers'
+    * results must not depend on batch order (the file source orders by
+    * modification time, and the seed's files land concurrently).
+    */
+  private[graft] def drainSeeded(df: DataFrame, batchOf: Column, prefix: String)(
+      onBatch: DataFrame => Unit): Unit = {
+    val seedRoot = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      val seedDir = seedRoot.resolve("in").toString
+      df.withColumn("__seed_batch", batchOf)
+        .repartition(col("__seed_batch"))
+        .write.partitionBy("__seed_batch").parquet(seedDir)
+      val stream = df.sparkSession.readStream
+        .schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(seedDir)
+      drainEach(stream)((batch, _) => onBatch(batch))
+    } finally StreamingDrift.deleteTempDir(seedRoot)
   }
 
   /** Monthly order stats computed *through the streaming engine* over the
@@ -155,30 +208,12 @@ object StreamingAgg {
                                            delay: String,
                                            maxFilesPerTrigger: Option[Int],
                                            fileSink: Option[(String, String)] = None): DataFrame = {
-    val reader = spark.readStream
-      .schema(spark.read.parquet(schemaFrom).schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val dedup = reader.parquet(dir)
+    val dedup = streamTable(spark, dir, glob, Some(schemaFrom), maxFilesPerTrigger)
       // parquet date -> TIMESTAMP_LTZ; watermarks require an event-time col
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
       .withWatermark("o_orderdate", delay)
       .dropDuplicatesWithinWatermark("o_custkey")
       .select(col("o_custkey"))
-    fileSink match {
-      case None => drain(dedup, "graft_stream_dedup_wm", "append")
-      case Some((outDir, ckpt)) =>
-        drainLock.synchronized {
-          val before = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", 8)
-          try {
-            val q = dedup.writeStream.outputMode("append").format("parquet")
-              .option("path", outDir).option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-        }
-        spark.read.parquet(outDir)
-    }
+    drain(dedup, "graft_stream_dedup_wm", "append", fileSink = fileSink)
   }
 }

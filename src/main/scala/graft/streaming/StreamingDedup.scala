@@ -79,9 +79,8 @@ object StreamingDedup {
     * batchId — a replayed micro-batch (or a whole replayed stream over a
     * live artifact, StreamingSpec's replay leg) recomputes the same key,
     * finds it live, and skips; engine batch numbering and file-listing
-    * order can never misalign the artifact. Seeds are written one file per
-    * planned batch + `maxFilesPerTrigger=1`, so micro-batch = planned
-    * batch.
+    * order can never misalign the artifact.
+    * [[StreamingAgg.drainSeeded]] streams one micro-batch per planned batch.
     *
     * Scale: the train corpus is scanned once ever (artifact build); each
     * micro-batch costs its own shingling + a band equi-join probe. The
@@ -262,8 +261,8 @@ object StreamingDedup {
     * [[graft.pipeline.ArtifactStore]] — and documents arrive as file-source
     * micro-batches that probe it STATELESSLY: an arriving doc embeds
     * map-side, assigns to its cell (argmin against the k trained centroids
-    * — k·dim bounded literals, the assignment has no aggregate so it stays
-    * a pure map in the streaming plan), centers by ITS CELL's mean (a
+    * — one kernel node, no aggregate, so it stays a pure map in the
+    * streaming plan), centers by ITS CELL's mean (a
     * broadcast stream-static join on the cell id), computes its band
     * buckets with the SAME kernel the index used, and joins the index on
     * (cell, band, bucket) with `id_a < id_b` — which IS keep-first: a doc
@@ -335,7 +334,6 @@ object StreamingDedup {
     import graft.functions.VectorFunctions.{cosineFromNormSq, l2NormSq}
     import graft.operators.AnnIndex
     import graft.pipeline.ArtifactStore
-    import org.apache.spark.sql.streaming.Trigger
     val emb = graft.pipeline.HashingEmbedder(embDim)
     val d = Tables.documents(spark, dir).select("doc_id", "text")
     val reps = Dedup.exactDedup(d, "doc_id", "text")
@@ -353,58 +351,38 @@ object StreamingDedup {
     // stateless, and the re-plan per micro-batch carries no centroid literals)
     val centMat = AnnIndex.centMat(cents)
 
-    // seed the ingest: one single-part file per planned batch (doc_id % 2)
-    val seedRoot = java.nio.file.Files.createTempDirectory("graft_stream_semcell")
-    val seedDir = seedRoot.resolve("in").toString
-    Seq(0, 1).foreach { m =>
-      d.filter(col("doc_id") % 2 === m).coalesce(1)
-        .write.mode("overwrite").parquet(s"$seedDir/b$m")
-    }
-    val streamed = spark.readStream
-      .schema(d.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(seedDir)
-    val q = streamed.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val contentKey = batch.agg(min(col("doc_id") % 2)).head.getLong(0)
-          ArtifactStore.appendBatchIfAbsent(spark, hitsRoot, contentKey) {
-            // exact axis: a lower-id rep with identical text and a nonzero
-            // vector (q243's dupz rule — zero vectors never score)
-            val exactHits = batch
-              .select(col("doc_id").as("id_b"), md5(col("text")).as("h"),
-                emb.embedRaw(col("text")).as("v_b"))
-              .filter(l2NormSq(col("v_b")) > 0.0)
-              .join(hashIdx, Seq("h"))
-              .filter(col("id_a") < col("id_b"))
-              .select(col("id_b"))
-            // semantic axis: assign → center by the cell's mean → band →
-            // probe the standing index within the cell, keep-first order
-            val semHits = batch
-              .select(col("doc_id").as("id_b"), emb.embedRaw(col("text")).as("v_b"))
-              .withColumn("cell", AnnIndex.argminCell(col("v_b"), centMat).cast("long"))
-              .join(broadcast(mu), Seq("cell"))
-              .withColumn("__nsq_b", l2NormSq(col("v_b")))
-              .select(col("id_b"), col("cell"), col("v_b"), col("__nsq_b"),
-                posexplode(AnnIndex.bandBucketsColOf(col("v_b"), col("__mu"),
-                  rbits, Dedup.SemBands)).as(Seq("__band", "__bucket")))
-              .join(idxSide, Seq("cell", "__band", "__bucket"))
-              .filter(col("id_a") < col("id_b"))
-              .withColumn("score", floorRound(
-                cosineFromNormSq(col("v_a"), col("v_b"), col("__nsq_a"), col("__nsq_b")), 6))
-              .filter(col("score") >= cosThreshold)
-              .select(col("id_b"))
-            exactHits.unionByName(semHits).distinct()
-          }
-        }
-        ()
+    // the ingest: one micro-batch per planned batch (doc_id % 2)
+    StreamingAgg.drainSeeded(d, col("doc_id") % 2, "graft_stream_semcell") { batch =>
+      val contentKey = batch.agg(min(col("doc_id") % 2)).head.getLong(0)
+      ArtifactStore.appendBatchIfAbsent(spark, hitsRoot, contentKey) {
+        // exact axis: a lower-id rep with identical text and a nonzero
+        // vector (q243's dupz rule — zero vectors never score)
+        val exactHits = batch
+          .select(col("doc_id").as("id_b"), md5(col("text")).as("h"),
+            emb.embedRaw(col("text")).as("v_b"))
+          .filter(l2NormSq(col("v_b")) > 0.0)
+          .join(hashIdx, Seq("h"))
+          .filter(col("id_a") < col("id_b"))
+          .select(col("id_b"))
+        // semantic axis: assign → center by the cell's mean → band →
+        // probe the standing index within the cell, keep-first order
+        val semHits = batch
+          .select(col("doc_id").as("id_b"), emb.embedRaw(col("text")).as("v_b"))
+          .withColumn("cell", AnnIndex.argminCell(col("v_b"), centMat).cast("long"))
+          .join(broadcast(mu), Seq("cell"))
+          .withColumn("__nsq_b", l2NormSq(col("v_b")))
+          .select(col("id_b"), col("cell"), col("v_b"), col("__nsq_b"),
+            posexplode(AnnIndex.bandBucketsColOf(col("v_b"), col("__mu"),
+              rbits, Dedup.SemBands)).as(Seq("__band", "__bucket")))
+          .join(idxSide, Seq("cell", "__band", "__bucket"))
+          .filter(col("id_a") < col("id_b"))
+          .withColumn("score", floorRound(
+            cosineFromNormSq(col("v_a"), col("v_b"), col("__nsq_a"), col("__nsq_b")), 6))
+          .filter(col("score") >= cosThreshold)
+          .select(col("id_b"))
+        exactHits.unionByName(semHits).distinct()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamingDrift.deleteTempDir(seedRoot)
+    }
     val losers = ArtifactStore.readBatches(spark, hitsRoot)
       .select(col("id_b").as("doc_id")).distinct().withColumn("__f", lit(1L))
     d.select("doc_id")
@@ -419,7 +397,6 @@ object StreamingDedup {
                                   hitsName: String = "neardup_hits_stream_s3_h32_b16_v1")
       : DataFrame = {
     import graft.pipeline.ArtifactStore
-    import org.apache.spark.sql.streaming.Trigger
     val d = Tables.documents(spark, dir).select("doc_id", "text")
     // the standing train index — SHARED with q200 (one deployment index,
     // two consumers: batch maintenance there, streaming maintenance here)
@@ -432,35 +409,16 @@ object StreamingDedup {
       ArtifactStore.rootFor(dir, s"neardup_train_sigs_s${shingleSize}_h${numHashes}_b${bands}_v1"))(idx._2)
     val hitsRoot = ArtifactStore.rootFor(dir, hitsName)
 
-    // seed the ingest: one single-part file per planned batch (test docs
-    // split doc_id % 10 = 0 / = 5 — q200's exact batches)
-    val seedRoot = java.nio.file.Files.createTempDirectory("graft_stream_neardup")
-    val seedDir = seedRoot.resolve("in").toString
-    Seq(0, 5).foreach { m =>
-      d.filter(col("doc_id") % 10 === m).coalesce(1)
-        .write.mode("overwrite").parquet(s"$seedDir/b$m")
-    }
-    val streamed = spark.readStream
-      .schema(d.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(seedDir)
-    val q = streamed.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val contentKey = batch.agg(min(col("doc_id") % 10)).head.getLong(0)
-          ArtifactStore.appendBatchIfAbsent(spark, hitsRoot, contentKey) {
-            Dedup.crossCorpusNearDupFromIndex(trainBands, trainSigs, batch,
-              "doc_id", "text", shingleSize, numHashes, bands, threshold)
-          }
-        }
-        ()
+    // the ingest: the test docs (doc_id % 5 = 0) as one micro-batch per
+    // doc_id % 10 = 0 / = 5 — q200's exact batches
+    StreamingAgg.drainSeeded(d.filter(col("doc_id") % 5 === 0), col("doc_id") % 10,
+        "graft_stream_neardup") { batch =>
+      val contentKey = batch.agg(min(col("doc_id") % 10)).head.getLong(0)
+      ArtifactStore.appendBatchIfAbsent(spark, hitsRoot, contentKey) {
+        Dedup.crossCorpusNearDupFromIndex(trainBands, trainSigs, batch,
+          "doc_id", "text", shingleSize, numHashes, bands, threshold)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamingDrift.deleteTempDir(seedRoot)
+    }
     ArtifactStore.readBatches(spark, hitsRoot).orderBy("test_id", "train_id")
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.Validate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming drift gate — the mid-ingest form of [[Validate.driftGate]]:
@@ -33,11 +32,7 @@ object StreamingDrift {
                           glob: String, maxFilesPerTrigger: Option[Int],
                           zMax: Double): DataFrame = {
     import spark.implicits._
-    val reader = spark.readStream
-      .schema(spark.read.parquet(schemaFrom).schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val streamed = reader.parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, glob, Some(schemaFrom), maxFilesPerTrigger)
       .filter(!(col("c_nationkey") === 13 && col("c_custkey") % 2 === 0))
       .select(col("c_nationkey"))
     // group -> count; driver-held because the key space is bounded.
@@ -47,21 +42,16 @@ object StreamingDrift {
     // table gets from writing batchId alongside the delta.
     var state = Map.empty[Int, Long]
     var lastApplied = -1L
-    val q = streamed.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastApplied) {
-          val delta = batch.groupBy("c_nationkey").agg(count(lit(1)).cast("long").as("n"))
-            .collect().map(r => (r.getInt(0), r.getLong(1)))
-          state = delta.foldLeft(state) { case (st, (g, n)) =>
-            st.updated(g, st.getOrElse(g, 0L) + n)
-          }
-          lastApplied = batchId
+    StreamingAgg.drainEach(streamed) { (batch, batchId) =>
+      if (batchId > lastApplied) {
+        val delta = batch.groupBy("c_nationkey").agg(count(lit(1)).cast("long").as("n"))
+          .collect().map(r => (r.getInt(0), r.getLong(1)))
+        state = delta.foldLeft(state) { case (st, (g, n)) =>
+          st.updated(g, st.getOrElse(g, 0L) + n)
         }
-        ()
+        lastApplied = batchId
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     val prevCounts = spark.read.option("pathGlobFilter", glob).parquet(dir)
       .groupBy(col("c_nationkey")).agg(count(lit(1)).cast("long").as("prev_n"))
     val nextCounts = state.toSeq.toDF("c_nationkey", "next_n")
@@ -117,10 +107,7 @@ object StreamingDrift {
               nextFilter: String, lo: Double, hi: Double, bins: Int,
               threshold: Double = 0.25): DataFrame = {
     import graft.operators.Sketches
-    val streamed = spark.readStream
-      .schema(spark.read.parquet(s"$dir/customer.parquet").schema)
-      .option("pathGlobFilter", "customer.parquet")
-      .parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, "customer.parquet")
       .filter(expr(nextFilter))
     val nextCounts = streamed
       .filter(Sketches.histValueFilter(col(valueCol)))
@@ -146,10 +133,7 @@ object StreamingDrift {
              nextFilter: String, lo: Double, hi: Double, bins: Int,
              threshold: Double): DataFrame = {
     import graft.operators.Sketches
-    val streamed = spark.readStream
-      .schema(spark.read.parquet(s"$dir/customer.parquet").schema)
-      .option("pathGlobFilter", "customer.parquet")
-      .parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, "customer.parquet")
       .filter(expr(nextFilter))
     val nextCounts = streamed
       .filter(Sketches.histValueFilter(col(valueCol)))
@@ -184,10 +168,7 @@ object StreamingDrift {
                   nextFilter: String, threshold: Double,
                   scanParts: Int = 32): DataFrame = {
     val v = col(valueCol).cast("double")
-    val streamed = spark.readStream
-      .schema(spark.read.parquet(s"$dir/customer.parquet").schema)
-      .option("pathGlobFilter", "customer.parquet")
-      .parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, "customer.parquet")
       .filter(expr(nextFilter))
     val nextCounts = streamed
       .filter(v.isNotNull && !isnan(v))
@@ -216,10 +197,7 @@ object StreamingDrift {
                      lo: Double, hi: Double, bins: Int,
                      threshold: Double = 0.25): DataFrame = {
     import graft.operators.Sketches
-    val streamed = spark.readStream
-      .schema(spark.read.parquet(s"$dir/customer.parquet").schema)
-      .option("pathGlobFilter", "customer.parquet")
-      .parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, "customer.parquet")
       .filter(expr(nextFilter))
     val nextCounts = streamed
       .filter(Sketches.histValueFilter(col(valueCol)))
@@ -255,10 +233,7 @@ object StreamingDrift {
                              cents: Seq[Seq[Double]], prevCounts: DataFrame,
                              threshold: Double = 0.25): DataFrame = {
     import graft.operators.AnnIndex
-    val streamed = spark.readStream
-      .schema(spark.read.parquet(s"$dir/embeddings.parquet").schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, "embeddings.parquet")
       .filter(expr(nextFilter))
     val nextCounts = streamed
       .select(AnnIndex.argminCell(expr(vecExpr), AnnIndex.centMat(cents)).cast("long").as("bin"))
@@ -280,34 +255,26 @@ object StreamingDrift {
                      buckets: Int = 64): DataFrame = {
     val stateRoot = java.nio.file.Files.createTempDirectory("graft_drift_state")
     val statePath = stateRoot.resolve("state").toString
-    val reader = spark.readStream
-      .schema(spark.read.parquet(s"$dir/customer.parquet").schema)
-      .option("pathGlobFilter", "customer.parquet")
-    val streamed = reader.parquet(dir)
+    val streamed = StreamingAgg.streamTable(spark, dir, "customer.parquet")
       .filter(col("c_custkey") % (2 * buckets) =!= 7)
       .select((col("c_custkey") % buckets).as("g"))
-    val q = streamed.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch.groupBy("g").agg(count(lit(1)).cast("long").as("next_n"))
-        mergeCountDelta(spark, statePath, delta, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val prevCounts = spark.read.option("pathGlobFilter", "customer.parquet").parquet(dir)
-      .groupBy((col("c_custkey") % buckets).as("g")).agg(count(lit(1)).cast("long").as("prev_n"))
-    val nextCounts = spark.read.parquet(statePath).select("g", "next_n")
-    val gate = Validate.driftGateFromCounts(prevCounts, nextCounts, "g", zMax)
     // Materialize the verdict (≤ `buckets` rows — a bounded parameter fetch,
     // not a data-plane collect) so the returned plan no longer references
     // the temp state table, then drop the whole temp root — state, the
     // .staging scratch, and any .old swap remnant — instead of leaking one
-    // orphaned directory per invocation (ADVICE r10).
-    import scala.jdk.CollectionConverters._
-    val out = spark.createDataFrame(gate.collect().toSeq.asJava, gate.schema)
-    deleteRecursively(stateRoot)
-    out
+    // orphaned directory per invocation (ADVICE r10), also when a batch fails.
+    try {
+      StreamingAgg.drainEach(streamed) { (batch, batchId) =>
+        val delta = batch.groupBy("g").agg(count(lit(1)).cast("long").as("next_n"))
+        mergeCountDelta(spark, statePath, delta, batchId)
+      }
+      val prevCounts = spark.read.option("pathGlobFilter", "customer.parquet").parquet(dir)
+        .groupBy((col("c_custkey") % buckets).as("g")).agg(count(lit(1)).cast("long").as("prev_n"))
+      val nextCounts = spark.read.parquet(statePath).select("g", "next_n")
+      val gate = Validate.driftGateFromCounts(prevCounts, nextCounts, "g", zMax)
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(gate.collect().toSeq.asJava, gate.schema)
+    } finally deleteRecursively(stateRoot)
   }
 
   /** Best-effort recursive delete of a local temp directory (shared by the

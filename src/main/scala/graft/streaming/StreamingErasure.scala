@@ -21,39 +21,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StreamingErasure {
 
-  /** The shared tombstone-micro-batch driver: seed `tomb` as `nBatches`
-    * single-file batches (split by `pmod(idCol, nBatches)`), stream them
-    * with `maxFilesPerTrigger = 1`, and run `onBatch` once per non-empty
-    * micro-batch under `Trigger.AvailableNow`. Both erasure topologies —
-    * partitioned-index repair and batch-layout purge — are this driver
-    * with a different per-batch action.
+  /** The shared tombstone-micro-batch driver: `tomb` streamed as up to
+    * `nBatches` micro-batches (split by `pmod(idCol, nBatches)`), `onBatch`
+    * once per non-empty one. Both erasure topologies — partitioned-index
+    * repair and batch-layout purge — are this driver with a different
+    * per-batch action.
     */
-  private def driveTombstones(spark: SparkSession, idCol: String,
-                              tomb: DataFrame, nBatches: Int)(
-      onBatch: DataFrame => Unit): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val seedRoot = java.nio.file.Files.createTempDirectory("graft_stream_erasure")
-    val seedDir = seedRoot.resolve("in").toString
-    (0 until nBatches).foreach { m =>
-      tomb.filter(pmod(col(idCol), lit(nBatches.toLong)) === m).coalesce(1)
-        .write.mode("overwrite").parquet(s"$seedDir/b$m")
-    }
-    val streamed = spark.readStream
-      .schema(tomb.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(seedDir)
-    val q = streamed.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) onBatch(batch)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamingDrift.deleteTempDir(seedRoot)
-  }
+  private def driveTombstones(idCol: String, tomb: DataFrame, nBatches: Int)(
+      onBatch: DataFrame => Unit): Unit =
+    StreamingAgg.drainSeeded(tomb, pmod(col(idCol), lit(nBatches.toLong)),
+      "graft_stream_erasure")(onBatch)
 
   /** Repair the partitioned index at `root` once per tombstone
     * micro-batch. `touchedOf` maps a batch to its touched partition values
@@ -62,7 +39,7 @@ object StreamingErasure {
   def streamRepair(spark: SparkSession, root: String, partCol: String,
                    idCol: String, tomb: DataFrame, nBatches: Int,
                    touchedOf: DataFrame => Seq[Long]): Unit =
-    driveTombstones(spark, idCol, tomb, nBatches) { batch =>
+    driveTombstones(idCol, tomb, nBatches) { batch =>
       graft.pipeline.IndexErasure.repairErased(
         spark, root, partCol, touchedOf(batch), idCol, batch)
       ()
@@ -79,7 +56,7 @@ object StreamingErasure {
     */
   def streamPurge(spark: SparkSession, root: String, refCols: Seq[String],
                   idCol: String, tomb: DataFrame, nBatches: Int): Unit =
-    driveTombstones(spark, idCol, tomb, nBatches) { batch =>
+    driveTombstones(idCol, tomb, nBatches) { batch =>
       graft.pipeline.IndexErasure.purgeBatches(spark, root, refCols, batch, idCol)
       ()
     }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.functions.MathFunctions.floorRound
 import graft.operators.Incremental
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming incremental view maintenance: a keyed additive aggregate is
@@ -28,28 +27,19 @@ object StreamingIncremental {
   def monthlyOrderStateFrom(spark: SparkSession, dir: String, schemaFrom: String,
                             glob: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
     import spark.implicits._
-    val reader = spark.readStream
-      .schema(spark.read.parquet(schemaFrom).schema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val withKey = reader.parquet(dir)
+    val withKey = StreamingAgg.streamTable(spark, dir, glob, Some(schemaFrom), maxFilesPerTrigger)
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast("long").as("cents"))
     // month -> (n, sum_cents); driver-held because the key space is bounded
     var state = Map.empty[String, (Long, Long)]
-    val q = withKey.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = Incremental.aggState(batch, Seq("month"), Seq("cents"))
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        state = delta.foldLeft(state) { case (st, (m, n, c)) =>
-          val (n0, c0) = st.getOrElse(m, (0L, 0L))
-          st.updated(m, (n0 + n, c0 + c))
-        }
-        ()
+    StreamingAgg.drainEach(withKey) { (batch, _) =>
+      val delta = Incremental.aggState(batch, Seq("month"), Seq("cents"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      state = delta.foldLeft(state) { case (st, (m, n, c)) =>
+        val (n0, c0) = st.getOrElse(m, (0L, 0L))
+        st.updated(m, (n0 + n, c0 + c))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     state.toSeq.map { case (m, (n, c)) => (m, n, c) }
       .toDF("month", "n", "sum_cents")
       .select(col("month"), col("n"),

@@ -53,66 +53,36 @@ object StreamingPacking {
       project: DataFrame => DataFrame,
       sumCols: Seq[String]): DataFrame = {
     import graft.pipeline.ArtifactStore
-    import org.apache.spark.sql.streaming.Trigger
     require(sumCols.nonEmpty, "streamGlobalCumsums needs at least one summed column")
     val d = Tables.documents(spark, dir)
     val root = ArtifactStore.rootFor(dir, hitsName)
 
-    // seed the ingest: three contiguous doc_id ranges, one single-part file
-    // each (ordered ranges are what a real ingest's file naming gives; the
-    // content-keyed reconciliation below does NOT depend on arrival order).
-    // ONE partitioned write (guide §2.4): the per-range loop was three
-    // sequential write jobs, each re-scanning the documents table for its
-    // range filter; hash-repartitioning on the range id lands each range in
-    // exactly one task, so `partitionBy` emits exactly one file per range —
-    // the same three single-part files (and so the same micro-batch
-    // boundaries and content keys) for a third of the scans and jobs.
+    // the ingest: three contiguous doc_id ranges, one micro-batch each
+    // (ordered ranges are what a real ingest's file naming gives; the
+    // content-keyed reconciliation below does NOT depend on arrival order)
     val maxId = d.agg(max("doc_id")).head.getLong(0) // bounded parameter fetch
     val cuts = Seq(0L, maxId / 3 + 1, 2 * maxId / 3 + 1, maxId + 1)
-    val seedRoot = java.nio.file.Files.createTempDirectory("graft_stream_packing")
-    val seedDir = seedRoot.resolve("in").toString
-    d.withColumn("__b",
-        when(col("doc_id") < cuts(1), 0L)
-          .when(col("doc_id") < cuts(2), 1L).otherwise(2L))
-      .repartition(col("__b"))
-      .write.mode("overwrite").partitionBy("__b").parquet(seedDir)
-    val streamed = spark.readStream
-      .schema(d.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(seedDir)
-    val q = streamed.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE job decides emptiness AND the content key (r18 verdict item 7,
-        // per-batch fixed cost: a separate isEmpty() probe was a whole extra
-        // Spark job per micro-batch — min(doc_id) is null exactly when the
-        // batch is empty)
-        val keyRow = batch.agg(min("doc_id")).head
-        if (!keyRow.isNullAt(0)) {
-          val batchKey = keyRow.getLong(0)
-          ArtifactStore.appendBatchIfAbsent(spark, root, batchKey) {
-            // pass 1: exclusive cumsums WITHIN the micro-batch (batch-sized
-            // window) + the batch totals on every row
-            val w = Window.orderBy("doc_id")
-              .rowsBetween(Window.unboundedPreceding, -1)
-            val full = Window.rowsBetween(
-              Window.unboundedPreceding, Window.unboundedFollowing)
-            sumCols.foldLeft(project(batch)) { (acc, c) =>
-              acc.withColumn(s"__within_$c", coalesce(sum(c).over(w), lit(0L)))
-                .withColumn(s"__btot_$c", sum(c).over(full))
-            }
-              // readBatches doesn't expose the subdirectory key — carry the
-              // content key on every row for the pass-2 reconciliation
-              .withColumn("__batch", lit(batchKey))
-          }
+    val rangeOf = when(col("doc_id") < cuts(1), 0L)
+      .when(col("doc_id") < cuts(2), 1L).otherwise(2L)
+    StreamingAgg.drainSeeded(d, rangeOf, "graft_stream_packing") { batch =>
+      // no seeded micro-batch is empty, so the content key is one job
+      val batchKey = batch.agg(min("doc_id")).head.getLong(0)
+      ArtifactStore.appendBatchIfAbsent(spark, root, batchKey) {
+        // pass 1: exclusive cumsums WITHIN the micro-batch (batch-sized
+        // window) + the batch totals on every row
+        val w = Window.orderBy("doc_id")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val full = Window.rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)
+        sumCols.foldLeft(project(batch)) { (acc, c) =>
+          acc.withColumn(s"__within_$c", coalesce(sum(c).over(w), lit(0L)))
+            .withColumn(s"__btot_$c", sum(c).over(full))
         }
-        ()
+          // readBatches doesn't expose the subdirectory key — carry the
+          // content key on every row for the pass-2 reconciliation
+          .withColumn("__batch", lit(batchKey))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamingDrift.deleteTempDir(seedRoot)
+    }
 
     // pass 2: cross-batch offsets from the parameter-sized batch relation
     val rows = ArtifactStore.readBatches(spark, root)

@@ -32,12 +32,7 @@ object StreamingSketch {
   def hllDistinctFrom(spark: SparkSession, dir: String, glob: String,
                       schemaFrom: String, keyCol: String, p: Int,
                       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val reader = spark.readStream
-      .schema(spark.read.parquet(schemaFrom).schema)
-      .option("pathGlobFilter", glob)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
-      .parquet(dir)
+    val stream = StreamingAgg.streamTable(spark, dir, glob, Some(schemaFrom), maxFilesPerTrigger)
     val regs = Sketches.hllRegisterStage(stream.select(keyCol), keyCol, p)
       .groupBy("bucket").agg(max("rho").as("mj"))
     // Complete mode: the register table is tiny (<= 2^p rows) and each
@@ -60,11 +55,7 @@ object StreamingSketch {
   def histQuantiles(spark: SparkSession, dir: String, file: String,
                     valueCol: String, lo: Double, hi: Double, bins: Int,
                     qs: Seq[Double]): DataFrame = {
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/$file").schema)
-      .option("pathGlobFilter", file)
-      .parquet(dir)
-    val counts = stream
+    val counts = StreamingAgg.streamTable(spark, dir, file)
       .filter(Sketches.histValueFilter(col(valueCol)))
       .select(Sketches.histBinCol(col(valueCol), lo, hi, bins).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("n"))

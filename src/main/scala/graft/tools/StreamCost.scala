@@ -6,11 +6,11 @@ import org.apache.spark.sql.SparkSession
   * FIXED-COST audit (r18 verdict task 7). The streamed twins' wall is
   * dominated by per-micro-batch planning, not data — this decomposes it:
   *
-  *  - `null_stream_floor`: the shared micro-batch harness with a NO-OP
-  *    per-batch action (3 single-file micro-batches under
-  *    Trigger.AvailableNow, same seed/checkpoint choreography as the real
-  *    drivers, plus one count job per batch) — the cost a streamed twin
-  *    pays before doing ANY work;
+  *  - `null_stream_floor`: the shared seeded driver
+  *    ([[graft.streaming.StreamingAgg.drainSeeded]]) with a NO-OP
+  *    per-batch action (seed write plus 3 single-file micro-batches under
+  *    Trigger.AvailableNow, plus one aggregate job per batch) — the cost a
+  *    streamed twin pays before doing ANY work;
   *  - each streamed twin COLD (first run in this artifact generation —
   *    pays per-batch content-keyed artifact builds) and WARM (replay —
   *    appendBatchIfAbsent skips, only the read-side finish runs);
@@ -45,34 +45,14 @@ object StreamCost {
       time(graft.SparkEntry.queries(name)(spark, dir)
         .write.mode("overwrite").format("noop").save())
 
-    // the harness floor: same driver shape as streamGlobalCumsums /
-    // driveTombstones, no per-batch work beyond one aggregate job
+    // the harness floor: the seeded driver with one aggregate job per batch
     def nullStreamFloor(): Double = {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
       val d = graft.Tables.documents(spark, dir).select(col("doc_id"))
-      val seedRoot = java.nio.file.Files.createTempDirectory("graft_stream_floor")
-      val seedDir = seedRoot.resolve("in").toString
-      (0 until 3).foreach { i =>
-        d.filter(pmod(col("doc_id"), lit(3L)) === i).coalesce(1)
-          .write.mode("overwrite").parquet(f"$seedDir/b$i%02d")
+      time {
+        graft.streaming.StreamingAgg.drainSeeded(d, pmod(col("doc_id"), lit(3L)),
+            "graft_stream_floor") { b => b.agg(min("doc_id")).head; () }
       }
-      val t = time {
-        val q = spark.readStream.schema(d.schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("recursiveFileLookup", "true")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(seedDir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.agg(min("doc_id")).head; ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      graft.streaming.StreamingDrift.deleteTempDir(seedRoot)
-      t
     }
 
     // warmup (same rationale as Bench)

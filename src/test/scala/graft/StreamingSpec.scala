@@ -525,4 +525,76 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       "pure reorder must be semantic-only evidence")
     assert(v(30L) === (((0L, 0L, 0L), 0L, "keep")))
   }
+
+  test("drain drops its memory-sink view and the frame keeps the drained rows") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.MathFunctions.floorRound
+    val stream = StreamingAgg.monthlyOrderStats(spark, sfDir)
+    assert(spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_monthly")).isEmpty,
+      "a drain must not leave its sink view in the session catalog")
+    val batch = Tables.orders(spark, sfDir)
+      .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
+      .agg(count(lit(1)).as("n"), floorRound(sum("o_totalprice"), 2).as("total"))
+      .collect().map(_.toSeq).toSet
+    assert(stream.collect().map(_.toSeq).toSet === batch)
+    assert(batch.nonEmpty)
+  }
+
+  test("drain restores spark.sql.shuffle.partitions when the stream fails") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(before != "8", "the drain's state-partition override must be observable")
+    val boom = udf((k: Long) => if (k >= 0) throw new IllegalStateException("boom") else k)
+    def failing = StreamingAgg.streamTable(spark, sfDir, "orders.parquet")
+      .select(boom(col("o_orderkey")).as("k"))
+    intercept[StreamingQueryException] {
+      StreamingAgg.drain(failing, "graft_spec_failing", "append")
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+    assert(spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_spec_failing")).isEmpty)
+    val root = Files.createTempDirectory("graft_spec_failing")
+    try {
+      val sink = Some((root.resolve("out").toString, root.resolve("ckpt").toString))
+      intercept[StreamingQueryException] {
+        StreamingAgg.drain(failing, "graft_spec_failing", "append", fileSink = sink)
+      }
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+    } finally graft.streaming.StreamingDrift.deleteTempDir(root)
+  }
+
+  test("drainSeeded runs onBatch once per distinct non-empty batch key") {
+    import org.apache.spark.sql.functions._
+    // key 3 is a possible value of the batch column that no row takes
+    val df = spark.range(0, 40).toDF().filter(col("id") % 4 =!= 3)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    StreamingAgg.drainSeeded(df, col("id") % 4, "graft_spec_seeded") { batch =>
+      seen.add(batch.collect().map(_.getLong(0)).toSeq)
+      ()
+    }
+    import scala.jdk.CollectionConverters._
+    val batches = seen.asScala.toSeq
+    assert(batches.size === 3)
+    assert(batches.forall(b => b.map(_ % 4).distinct.size == 1),
+      "every micro-batch holds exactly one batch key")
+    assert(batches.flatten.sorted === df.collect().map(_.getLong(0)).toSeq.sorted)
+  }
+
+  test("drainSeeded rethrows a failing batch and deletes its seed root") {
+    import org.apache.spark.sql.functions._
+    val prefix = s"graft_spec_seedfail_${java.util.UUID.randomUUID().toString.take(8)}_"
+    val e = intercept[Exception] {
+      StreamingAgg.drainSeeded(spark.range(0, 10).toDF(), col("id") % 2, prefix) { _ =>
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    assert(tmp.listFiles().forall(!_.getName.startsWith(prefix)),
+      "the seed temp root must not outlive a failed drain")
+  }
 }
