@@ -8,7 +8,7 @@ side's median and quartiles plus how many seed pairs B won.
 
 Usage, from the root of a checkout:
 
-    git worktree add ../parent HEAD~1
+    mkdir ../parent && git archive HEAD~1 | tar -x -C ../parent
     python3 scripts/perfbench_ab.py --a ../parent --b . --workload cron-delta \\
         --seeds 11-20 [--seconds 20] [--trace 0]
 
@@ -16,7 +16,8 @@ Each side builds itself on its first run (see perfbench/README.md). Metric
 names and directions come from B's BENCHMARK.json: its `end_to_end` list,
 or with `--trace 1` its `per_layer` list, since a traced run prints only
 the per-layer figures. Steal is read from /proc/stat around each run (0
-where that file does not exist).
+where that file does not exist). A run that prints no result line is
+reported as failed, followed by the last lines of its stderr.
 """
 import argparse
 import json
@@ -24,6 +25,8 @@ import os
 import statistics
 import subprocess
 import sys
+
+STDERR_TAIL = 20  # stderr lines shown for a run that gave no result line
 
 
 def parse_seeds(text):
@@ -55,13 +58,14 @@ def run_once(checkout, workload, seed, seconds, trace):
     cmd = [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     t0 = cpu_times()
-    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                        text=True)
     steal = steal_between(t0, cpu_times())
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
-        return None, steal
-    return json.loads(lines[-1]), steal
+        # the cause (a build error, a stack trace) is on stderr
+        return None, steal, p.stderr.strip().splitlines()[-STDERR_TAIL:]
+    return json.loads(lines[-1]), steal, []
 
 
 def quartiles(xs):
@@ -90,9 +94,10 @@ def main():
     print("side seed correct failed steal " + " ".join(n for n, _ in metrics), flush=True)
     for i, seed in enumerate(parse_seeds(a.seeds)):
         for side in (("A", "B") if i % 2 == 0 else ("B", "A")):
-            res, steal = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
+            res, steal, stderr_tail = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
             if res is None:
-                print(f"{side} {seed} run failed (no result line)", flush=True)
+                print(f"{side} {seed} run failed (no result line); its stderr ends:", flush=True)
+                print("\n".join(f"  | {line}" for line in stderr_tail), flush=True)
                 continue
             vals = {n: res["metrics"][n]["value"] for n, _ in metrics if n in res["metrics"]}
             results[side][seed] = vals

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * set-oriented left-outer equi-join. The cache is small (one row per file) so
   * Catalyst auto-broadcasts it; if state ever outgrows broadcast the same plan
   * degrades gracefully to a sort-merge join — correct at 100 TB with no code
-  * change. (That holds for the joins here; [[Sync]]'s pruned content read
-  * has its own driver-side limit, see `Sync.run`.)
+  * change. (That holds for the joins here; [[Sync]]'s driver-side listing
+  * has its own limit, see `Sync.run`.)
   */
 object Delta {
 

@@ -63,31 +63,6 @@ object StreamingDedup {
       .join(droppedByCorpus.withColumnRenamed("id_b", "doc_id"), Seq("doc_id"), "left_anti")
   }
 
-  /** STREAM-MAINTAINED near-dup hits artifact (r12 verdict task 2): q200's
-    * incremental index maintenance driven by the streaming engine instead
-    * of explicit driver calls — test documents arrive as file-source
-    * micro-batches, `foreachBatch` probes each against the STANDING train
-    * band/signature artifacts and appends the batch's pairs to the hits
-    * artifact via [[graft.pipeline.ArtifactStore.appendBatchIfAbsent]].
-    * Stream-maintained ≡ batch-maintained ≡ rebuilt: per-test-doc results
-    * depend only on that doc and the train index, so the union over any
-    * micro-batching equals the full two-sided rebuild — the oracle is
-    * q194's SQL verbatim.
-    *
-    * Idempotence under at-least-once `foreachBatch`: artifact batches are
-    * keyed by CONTENT (the batch's min test id), not by the engine's
-    * batchId — a replayed micro-batch (or a whole replayed stream over a
-    * live artifact, StreamingSpec's replay leg) recomputes the same key,
-    * finds it live, and skips; engine batch numbering and file-listing
-    * order can never misalign the artifact.
-    * [[StreamingAgg.drainSeeded]] streams one micro-batch per planned batch.
-    *
-    * Scale: the train corpus is scanned once ever (artifact build); each
-    * micro-batch costs its own shingling + a band equi-join probe. The
-    * artifact grows append-only, one subdirectory per ingest batch — the
-    * reference pipeline's mtime short-circuit (`main.py:143-147`) applied
-    * to a streaming index.
-    */
   /** STREAMED MULTI-AXIS INGEST VERDICT (the fusion × streaming matrix
     * cell): delta documents arrive as a stream and probe the STANDING
     * corpus on two axes at once — exact text-hash identity (stream-static
@@ -253,33 +228,6 @@ object StreamingDedup {
       .orderBy("doc_id")
   }
 
-  /** STREAMED CELL-SCOPED SEMANTIC DEDUP — q243's multi-domain trained-cell
-    * path at ingest time (r16 verdict task 3): the trained geometry stands
-    * as content-keyed artifacts — Lloyd centroids (k lowest-id-init reps,
-    * one step), per-cell floored means, and the cell-scoped banded index of
-    * every distinct-text rep, each built once per input dir via
-    * [[graft.pipeline.ArtifactStore]] — and documents arrive as file-source
-    * micro-batches that probe it STATELESSLY: an arriving doc embeds
-    * map-side, assigns to its cell (argmin against the k trained centroids
-    * — one kernel node, no aggregate, so it stays a pure map in the
-    * streaming plan), centers by ITS CELL's mean (a
-    * broadcast stream-static join on the cell id), computes its band
-    * buckets with the SAME kernel the index used, and joins the index on
-    * (cell, band, bucket) with `id_a < id_b` — which IS keep-first: a doc
-    * is a loser exactly when some lower-id rep in its cell verifies at raw
-    * cosine ≥ τ. The exact-duplicate axis (non-rep docs inherit the flag)
-    * is a stream-static md5 join with the same id ordering. Hits append to
-    * a content-keyed artifact per micro-batch ([[graft.pipeline
-    * .ArtifactStore.appendBatchIfAbsent]], the q203 idempotence contract);
-    * per-doc results depend only on (doc, standing artifacts), so any
-    * micro-batching reproduces the batch operator — the oracle is q243's
-    * SQL verbatim.
-    *
-    * Scale: the rep corpus is scanned once ever (artifact builds); each
-    * micro-batch costs embed + k dots + bands kernel + two equi-join
-    * probes. No streaming state; duplicates collapse in the post-drain
-    * distinct.
-    */
   /** The q243 trained geometry as STANDING content-keyed artifacts —
     * embedded reps (cached), band width, trained centroids, rep cell
     * assignments, per-cell floored means, and the cell-scoped banded rep
@@ -326,6 +274,33 @@ object StreamingDedup {
     (repVecs, rbits, cents, asg, mu, bandIdx)
   }
 
+  /** STREAMED CELL-SCOPED SEMANTIC DEDUP — q243's multi-domain trained-cell
+    * path at ingest time (r16 verdict task 3): the trained geometry stands
+    * as content-keyed artifacts — Lloyd centroids (k lowest-id-init reps,
+    * one step), per-cell floored means, and the cell-scoped banded index of
+    * every distinct-text rep, each built once per input dir via
+    * [[graft.pipeline.ArtifactStore]] — and documents arrive as file-source
+    * micro-batches that probe it STATELESSLY: an arriving doc embeds
+    * map-side, assigns to its cell (argmin against the k trained centroids
+    * — one kernel node, no aggregate, so it stays a pure map in the
+    * streaming plan), centers by ITS CELL's mean (a
+    * broadcast stream-static join on the cell id), computes its band
+    * buckets with the SAME kernel the index used, and joins the index on
+    * (cell, band, bucket) with `id_a < id_b` — which IS keep-first: a doc
+    * is a loser exactly when some lower-id rep in its cell verifies at raw
+    * cosine ≥ τ. The exact-duplicate axis (non-rep docs inherit the flag)
+    * is a stream-static md5 join with the same id ordering. Hits append to
+    * a content-keyed artifact per micro-batch ([[graft.pipeline
+    * .ArtifactStore.appendBatchIfAbsent]], the q203 idempotence contract);
+    * per-doc results depend only on (doc, standing artifacts), so any
+    * micro-batching reproduces the batch operator — the oracle is q243's
+    * SQL verbatim.
+    *
+    * Scale: the rep corpus is scanned once ever (artifact builds); each
+    * micro-batch costs embed + k dots + bands kernel + two equi-join
+    * probes. No streaming state; duplicates collapse in the post-drain
+    * distinct.
+    */
   def streamSemanticCellDedup(spark: SparkSession, dir: String,
                               embDim: Int = 64, k: Int = 16,
                               cosThreshold: Double = 0.95,
@@ -391,6 +366,31 @@ object StreamingDedup {
       .orderBy("doc_id")
   }
 
+  /** STREAM-MAINTAINED near-dup hits artifact (r12 verdict task 2): q200's
+    * incremental index maintenance driven by the streaming engine instead
+    * of explicit driver calls — test documents arrive as file-source
+    * micro-batches, `foreachBatch` probes each against the STANDING train
+    * band/signature artifacts and appends the batch's pairs to the hits
+    * artifact via [[graft.pipeline.ArtifactStore.appendBatchIfAbsent]].
+    * Stream-maintained ≡ batch-maintained ≡ rebuilt: per-test-doc results
+    * depend only on that doc and the train index, so the union over any
+    * micro-batching equals the full two-sided rebuild — the oracle is
+    * q194's SQL verbatim.
+    *
+    * Idempotence under at-least-once `foreachBatch`: artifact batches are
+    * keyed by CONTENT (the batch's min test id), not by the engine's
+    * batchId — a replayed micro-batch (or a whole replayed stream over a
+    * live artifact, StreamingSpec's replay leg) recomputes the same key,
+    * finds it live, and skips; engine batch numbering and file-listing
+    * order can never misalign the artifact.
+    * [[StreamingAgg.drainSeeded]] streams one micro-batch per planned batch.
+    *
+    * Scale: the train corpus is scanned once ever (artifact build); each
+    * micro-batch costs its own shingling + a band equi-join probe. The
+    * artifact grows append-only, one subdirectory per ingest batch — the
+    * reference pipeline's mtime short-circuit (`main.py:143-147`) applied
+    * to a streaming index.
+    */
   def streamMaintainedNearDupHits(spark: SparkSession, dir: String,
                                   shingleSize: Int = 3, numHashes: Int = 32,
                                   bands: Int = 16, threshold: Double = 0.5,

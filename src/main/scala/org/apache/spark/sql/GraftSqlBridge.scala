@@ -30,4 +30,12 @@ object GraftSqlBridge {
     */
   def toInternalRdd(df: DataFrame): RDD[InternalRow] =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.toRdd
+
+  /** True for a file or directory name Spark's file listing skips
+    * (`HadoopFSUtils.shouldFilterOutPathName`): a leading `.`, a leading
+    * `_` unless the name holds `=` or starts `_metadata` /
+    * `_common_metadata`, and a `._COPYING_` suffix.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -14,7 +14,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private def mkCorpus(): Path = {
-    val root = Files.createTempDirectory("graft_corpus")
+    val root = tempDir("graft_corpus")
     Files.createDirectories(root.resolve("sub/nested"))
     Files.writeString(root.resolve("a.md"), "alpha beta gamma")
     Files.writeString(root.resolve("sub/b.md"), "delta epsilon zeta")
@@ -36,6 +36,43 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     rows.foreach(r => assert(r.getLong(1) > 0))
   }
 
+  test("FileScan lists exactly the files Spark's recursive binaryFile load reads") {
+    val root = tempDir("graft_parity")
+    def put(rel: String, text: String = "some words"): Path = {
+      val f = root.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, text)
+    }
+    // more than 32 subdirectories: Spark lists these with a parallel job
+    (0 until 40).foreach(i => put(f"d$i%02d/n$i.md"))
+    Seq(".obsidian/w.md", "_drafts/x.md", ".x.md", "_x.md", "k=v/y.md", "_k=v.md",
+      "h.md._COPYING_", "_metadata/z.md", "_metadata.md", "notes.txt",
+      "sp ace.md", "pct%41.md", "br[1].md", "s d/x{y}.md", "ü.md").foreach(put(_))
+    put("empty.md", "")
+    def sparkPaths(regex: String): Set[String] =
+      spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(root.toString)
+        .filter(col("path").rlike(regex)).select("path").as[String].collect().toSet
+    for (regex <- Seq(".*\\.md$", ".*", "/d0[0-4]/")) {
+      val expected = sparkPaths(regex)
+      assert(FileScan.scan(spark, root.toString, regex).select("path").as[String].collect().toSet
+        === expected, regex)
+      assert(FileScan.list(spark, root.toString, regex).map(_.getPath.toString).toSet === expected, regex)
+    }
+    assert(sparkPaths(".*").filterNot(_.matches(".*/d\\d+/n\\d+\\.md")).map(_.split('/').last) ===
+      Set("y.md", "_k=v.md", "z.md", "notes.txt", "sp ace.md", "pct%41.md", "br[1].md",
+        "x{y}.md", "ü.md"))
+
+    // a file emptied after indexing is gone, as Spark's listing has it
+    val corpus = mkCorpus()
+    Seq("a.md", "sub/b.md", "sub/nested/c.md").foreach(f => touch(corpus.resolve(f), 1000000L))
+    val sync = new Sync(corpus.toString, tempDir("graft_pas").resolve("state").toString,
+      tempDir("graft_pai").resolve("index").toString, HashingEmbedder(8))
+    assert(sync.run(spark).indexed === 3)
+    Files.writeString(corpus.resolve("a.md"), "")
+    val r = sync.run(spark)
+    assert((r.scanned, r.changed, r.skippedTooLong, r.indexed, r.deleted) === ((2, 0, 0, 0, 1)))
+  }
+
   test("Delta: missing => 0, strict >") {
     val scan  = Seq(("p1", 100L), ("p2", 100L), ("p3", 100L)).toDF("path", "mtime")
     val cache = Seq(("p1", 100L), ("p2", 50L)).toDF("path", "last_edit_time")
@@ -51,7 +88,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("StateStore: empty read, write, staged rewrite from own read") {
-    val dir   = Files.createTempDirectory("graft_state").resolve("state").toString
+    val dir   = tempDir("graft_state").resolve("state").toString
     val store = new StateStore(dir)
     assert(store.read(spark).count() === 0)
     store.write(Seq(("p1", 10L)).toDF("path", "last_edit_time"))
@@ -62,7 +99,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("VectorIndex: dimension validation + keyed upsert") {
-    val dir = Files.createTempDirectory("graft_index").resolve("index").toString
+    val dir = tempDir("graft_index").resolve("index").toString
     val idx = new VectorIndex(dir, 2)
     val v1 = Seq(
       ("a", Seq(1.0, 0.0), Map.empty[String, String], 1L),
@@ -79,9 +116,9 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   test("config + CLI lifecycle: TOML load, defaults, dry-run really writes nothing") {
     import graft.pipeline.GraftConfig
     val root  = mkCorpus()
-    val state = Files.createTempDirectory("graft_cs").resolve("state").toString
-    val index = Files.createTempDirectory("graft_ci").resolve("index").toString
-    val conf  = Files.createTempDirectory("graft_cc").resolve("config.toml")
+    val state = tempDir("graft_cs").resolve("state").toString
+    val index = tempDir("graft_ci").resolve("index").toString
+    val conf  = tempDir("graft_cc").resolve("config.toml")
     Files.writeString(conf,
       s"""# graft config (reference-config analog: main.py:19-53)
          |[base]
@@ -125,7 +162,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("VectorIndex refuses writes from a different embedder generation") {
-    val dir = Files.createTempDirectory("graft_index_e").resolve("index").toString
+    val dir = tempDir("graft_index_e").resolve("index").toString
     val rows = Seq(("a", Seq(1.0, 0.0), Map.empty[String, String], 1L))
       .toDF("id", "embedding", "metadata", "version")
     new VectorIndex(dir, 2, Some("embedder-v1")).upsert(rows)
@@ -146,7 +183,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("VectorIndex refuses deletes from a different embedder generation") {
-    val dir = Files.createTempDirectory("graft_index_d").resolve("index").toString
+    val dir = tempDir("graft_index_d").resolve("index").toString
     val rows = Seq(("a", Seq(1.0, 0.0), Map.empty[String, String], 1L),
         ("b", Seq(0.0, 1.0), Map.empty[String, String], 1L))
       .toDF("id", "embedding", "metadata", "version")
@@ -168,8 +205,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
 
   test("Sync end-to-end: full index, empty re-run, single-file re-index, dry run") {
     val root   = mkCorpus()
-    val state  = Files.createTempDirectory("graft_s").resolve("state").toString
-    val index  = Files.createTempDirectory("graft_i").resolve("index").toString
+    val state  = tempDir("graft_s").resolve("state").toString
+    val index  = tempDir("graft_i").resolve("index").toString
     // pin mtimes well in the past so the re-touch below is a clean bump
     Seq("a.md", "sub/b.md", "sub/nested/c.md").foreach(f => touch(root.resolve(f), 1000000L))
     val sync = new Sync(root.toString, state, index, HashingEmbedder(8))
@@ -194,8 +231,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
 
   test("Sync: deletion propagates to index AND cache; re-create re-indexes; replay converges") {
     val root  = mkCorpus()
-    val state = Files.createTempDirectory("graft_sd").resolve("state").toString
-    val index = Files.createTempDirectory("graft_id").resolve("index").toString
+    val state = tempDir("graft_sd").resolve("state").toString
+    val index = tempDir("graft_id").resolve("index").toString
     Seq("a.md", "sub/b.md", "sub/nested/c.md").foreach(f => touch(root.resolve(f), 1000000L))
     val sync = new Sync(root.toString, state, index, HashingEmbedder(8))
     assert(sync.run(spark).indexed === 3)
@@ -243,11 +280,11 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("Sync: over-long documents are filtered, not crashed (P3)") {
-    val root  = Files.createTempDirectory("graft_long")
+    val root  = tempDir("graft_long")
     Files.writeString(root.resolve("long.md"), Seq.fill(9000)("w").mkString(" "))
     Files.writeString(root.resolve("ok.md"), "short doc")
-    val state = Files.createTempDirectory("graft_s2").resolve("state").toString
-    val index = Files.createTempDirectory("graft_i2").resolve("index").toString
+    val state = tempDir("graft_s2").resolve("state").toString
+    val index = tempDir("graft_i2").resolve("index").toString
     val sync = new Sync(root.toString, state, index, HashingEmbedder(8))
     val r = sync.run(spark)
     assert(r.changed === 2 && r.skippedTooLong === 1 && r.indexed === 1)
@@ -275,11 +312,11 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("Sync: an edit that makes a doc over-long erases its stale vector") {
-    val root  = Files.createTempDirectory("graft_grow")
+    val root  = tempDir("graft_grow")
     val doc   = root.resolve("doc.md")
     Files.writeString(doc, "short enough to index")
-    val state = Files.createTempDirectory("graft_s3").resolve("state").toString
-    val index = Files.createTempDirectory("graft_i3").resolve("index").toString
+    val state = tempDir("graft_s3").resolve("state").toString
+    val index = tempDir("graft_i3").resolve("index").toString
     val sync = new Sync(root.toString, state, index, HashingEmbedder(8))
     assert(sync.run(spark).indexed === 1)
     def indexedIds() = spark.read.parquet(index).select("id")
@@ -305,7 +342,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       ("bad", Seq(1.0, 0.0, 0.0), 2L), ("e", Seq(0.5, 0.5), 2L))
     val dels = Seq("b", "e", "absent").toDF("id") // "e" is in both sets
     def fresh(): (String, VectorIndex) = {
-      val dir = Files.createTempDirectory("graft_upd").resolve("index").toString
+      val dir = tempDir("graft_upd").resolve("index").toString
       val idx = new VectorIndex(dir, 2, Some("embedder-v1"))
       idx.upsert(base)
       (dir, idx)
@@ -353,11 +390,11 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("Sync: file names Spark URL-encodes keep their edits, deletes and guard crossings") {
-    // content reads are pruned by `_metadata.file_path`, which is
-    // URL-encoded (%20, %25, %5B, %7B) where `path` is not: a prune set
-    // built from `path` would skip these files' content and still record
-    // their new mtime in state — a silently lost edit
-    val root  = Files.createTempDirectory("graft_names")
+    // Spark URL-encodes these names (%20, %25, %5B, %7B) in its file keys
+    // but not in `path`: a content read keyed by the wrong form would skip
+    // these files and still record their new mtime in state — a silently
+    // lost edit
+    val root  = tempDir("graft_names")
     val names = Seq("sp ace.md", "pct%41.md", "br[1].md", "s d/x{y}.md", "ü.md")
     val long  = Seq.fill(9000)("w").mkString(" ")
     Files.createDirectories(root.resolve("s d"))
@@ -365,8 +402,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       Files.writeString(root.resolve(n), text); touch(root.resolve(n), t)
     }
     names.foreach(n => put(n, s"first words of $n", 1000000L))
-    val state = Files.createTempDirectory("graft_ns").resolve("state").toString
-    val index = Files.createTempDirectory("graft_ni").resolve("index").toString
+    val state = tempDir("graft_ns").resolve("state").toString
+    val index = tempDir("graft_ni").resolve("index").toString
     val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
     val r1 = sync.run(spark)
     assert((r1.scanned, r1.changed, r1.skippedTooLong, r1.indexed, r1.deleted) === ((5, 5, 0, 5, 0)))
@@ -398,14 +435,14 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
     import org.apache.spark.sql.util.QueryExecutionListener
-    val root = Files.createTempDirectory("graft_shape")
+    val root = tempDir("graft_shape")
     (0 until 20).foreach { i =>
       val f = root.resolve(f"d$i%02d.md")
       Files.writeString(f, s"document $i " + Seq.fill(200)(s"w$i").mkString(" "))
       touch(f, 1000000L)
     }
-    val state = Files.createTempDirectory("graft_shs").resolve("state").toString
-    val index = Files.createTempDirectory("graft_shi").resolve("index").toString
+    val state = tempDir("graft_shs").resolve("state").toString
+    val index = tempDir("graft_shi").resolve("index").toString
     val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
     assert(sync.run(spark).indexed === 20)
 
@@ -456,10 +493,36 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       s"${reads.size} content scans read $bytesRead bytes for a ${Files.size(edited)}-byte delta")
   }
 
+  test("Sync lists a wide corpus without a Spark listing job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val root = tempDir("graft_wide")
+    (0 until 40).foreach { i =>
+      val d = Files.createDirectories(root.resolve(f"d$i%02d"))
+      Files.writeString(d.resolve("n.md"), s"note $i")
+    }
+    val sync = new Sync(root.toString, tempDir("graft_ws").resolve("state").toString,
+      tempDir("graft_wi").resolve("index").toString, HashingEmbedder(8))
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (cold, rerun) = try (sync.run(spark), sync.run(spark)) finally {
+      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(cold.indexed === 40 && rerun.changed === 0)
+    val listings = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
+    assert(listings.isEmpty, listings.mkString("; "))
+  }
+
   test("Sync: a run that fails leaves nothing cached") {
     val root  = mkCorpus()
-    val state = Files.createTempDirectory("graft_fs").resolve("state").toString
-    val index = Files.createTempDirectory("graft_fi").resolve("index").toString
+    val state = tempDir("graft_fs").resolve("state").toString
+    val index = tempDir("graft_fi").resolve("index").toString
     Seq("a.md", "sub/b.md", "sub/nested/c.md").foreach(f => touch(root.resolve(f), 1000000L))
     assert(new Sync(root.toString, state, index, HashingEmbedder(8)).run(spark).indexed === 3)
     touch(root.resolve("a.md"), 1000100L)

@@ -1,9 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
+
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** One shared local session across all suites (getOrCreate). */
-trait SparkTestSession {
+trait SparkTestSession extends BeforeAndAfterAll { this: Suite =>
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -15,4 +20,23 @@ trait SparkTestSession {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]
+
+  /** A new directory under `java.io.tmpdir`, deleted with everything in it
+    * when the suite ends.
+    */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.asScala.filter(Files.exists(_)).foreach { dir =>
+      val tree = Files.walk(dir)
+      try tree.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally tree.close()
+    }
 }
