@@ -13,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * rewritten from a plan that read it (Spark cannot overwrite an input path
   * in-flight). State is tiny relative to the corpus (one row per file), so a
   * snapshot rewrite per sync is the right trade at any scale: [[Sync]]
-  * writes it straight from the (path, mtime) listing and the changed
-  * files' cached guard verdicts it already holds, reading no file and no
-  * index.
+  * reads it whole into a driver map in one action, and writes it back from
+  * the (path, mtime) listing and the guard verdicts it collected, as one
+  * local relation, reading no file and no index.
   */
 final class StateStore(path: String) {
 

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** End-to-end incremental sync orchestration (SURVEY.md §3): scan → regex
   * filter → delta vs state → token guard → embed → index upsert → cache
@@ -28,79 +28,78 @@ final class Sync(
                     indexed: Long, deleted: Long, dryRun: Boolean)
 
   /** One cycle. Its Spark work follows the delta, not the corpus: the
-    * corpus is listed once, on the driver, and that listing is classified
-    * once against state; only changed files' content is read, from their
-    * listed statuses; the index is rewritten at most once (upserts and
-    * erasures in one staged swap); state is written from the listing
-    * snapshot.
+    * corpus is listed once, on the driver, and classified there against
+    * state read in one action; only changed files' content is read, from
+    * their listed statuses, and the guard's verdicts come back in one
+    * action; the index is rewritten at most once (upserts and erasures in
+    * one staged swap); state is written from the listing snapshot. An
+    * unchanged cycle is one Spark action, a cycle with edits four.
     *
     * Size limit: the driver holds one `FileStatus` per listed file, as
-    * Spark's own file index did, and the snapshot rides in the plan as a
-    * local relation of (path, mtime) rows. The walk is sequential: it
-    * trades Spark's parallel listing, which starts a job once a directory
-    * has more than 32 subdirectories, for no job at all. On a remote store
-    * with thousands of directories the parallel listing can be faster.
-    * Measured at `local[4]` on a 4-vCPU Xeon VM with 20 000 files in 200
-    * directories, two runs each: a cold sync took 28.6–29.5 s, an
-    * all-files-touched cycle 17.6–18.4 s and an unchanged cycle 2.9–3.1 s,
-    * against 31.0–32.7 s, 19.5 s and 7.6–7.9 s with Spark's listing job.
+    * Spark's own file index did, and one state row per file; the state
+    * write's snapshot rides in the plan as a local relation of (path,
+    * mtime, flag) rows. The walk is sequential: it trades Spark's parallel
+    * listing, which starts a job once a directory has more than 32
+    * subdirectories, for no job at all. On a remote store with thousands
+    * of directories the parallel listing can be faster. Measured at
+    * `local[4]` on a 4-vCPU Xeon VM with 20 000 files in 200 directories,
+    * two fresh JVMs each: a cold sync took 27.1–29.6 s, an all-files-
+    * touched cycle 12.4–13.4 s, an unchanged cycle 1.1–1.3 s and a one-file
+    * cycle 1.9–2.1 s, against 32.6 s, 14.7–16.0 s, 1.9–2.0 s and 3.0–3.3 s
+    * when the classification, the guard counts and the state write ran as
+    * Spark joins.
     */
   def run(spark: SparkSession, dryRun: Boolean = false): Report = {
     import graft.functions.TextFunctions
     import spark.implicits._
-    val state   = new StateStore(statePath)
-    val index   = new VectorIndex(indexPath, embedder.dim, Some(embedder.id))
-    val stateDf = state.read(spark)
-    val listed  = FileScan.list(spark, rootDir, pathRegex)
-    // cached frames are released however the run ends: a throw (e.g. the
-    // index refusing a different embedder) must not leave them cached for
-    // the rest of the session
-    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
-      // (path, mtime) snapshotted ONCE and classified against state: the
-      // state write below must record the mtimes this run actually saw —
-      // re-listing at write time could record a newer mtime for content
-      // embedded from the earlier read, silently losing that edit on the
-      // next run. mtime is epoch seconds, matching the reference's
-      // int(getmtime) (main.py:59). Gone rows are the deletion propagation
-      // the reference never does (its walk yields only existing files,
-      // main.py:62-68, so a deleted file's vector lives in Pinecone
-      // forever; SURVEY §2.7): they tombstone BOTH stores.
-      val snapshot = listed.map(f => (f.getPath.toString, Math.floorDiv(f.getModificationTime, 1000L)))
-        .toDF("path", "mtime")
-      val snap = cache(Delta.classify(snapshot, stateDf)
-        .withColumn("had_vector",
-          col("last_edit_time").isNotNull && !coalesce(col("too_long"), lit(false))))
-      val isChanged = col("status") === Delta.Changed
-      val isGone    = col("status") === Delta.Gone
-      // the delta, collected once: its counts and the changed files
-      val (changedRows, goneRows) = snap.filter(col("status") =!= Delta.Unchanged)
-        .select("path", "status").as[(String, String)].collect().partition(_._2 == Delta.Changed)
-      val (scanned, changed, goneN) =
-        (listed.size.toLong, changedRows.length.toLong, goneRows.length.toLong)
-      if (changed == 0 && goneN == 0) // empty-delta early exit (main.py:149-151)
-        return Report(scanned, 0, 0, 0, 0, dryRun)
+    val state = new StateStore(statePath)
+    val index = new VectorIndex(indexPath, embedder.dim, Some(embedder.id))
+    // (status, path, mtime) snapshotted ONCE: the state write below must
+    // record the mtimes this run actually saw — re-listing at write time
+    // could record a newer mtime for content embedded from the earlier
+    // read, silently losing that edit on the next run. mtime is epoch
+    // seconds, matching the reference's int(getmtime) (main.py:59). A
+    // missing rootDir throws here, before anything is read or written: an
+    // empty listing would tombstone every indexed file.
+    val listed = FileScan.list(spark, rootDir, pathRegex)
+      .map(f => (f, f.getPath.toString, Math.floorDiv(f.getModificationTime, 1000L)))
+    // state, read once: path -> (mtime, too_long); a state written before
+    // the flag existed reads null, i.e. not over-long
+    val known = state.read(spark)
+      .select(col("path"), col("last_edit_time"), coalesce(col("too_long"), lit(false)))
+      .as[(String, Long, Boolean)].collect().map { case (p, t, l) => p -> (t, l) }.toMap
+    // the delta (main.py:143-147): strictly newer than the cached mtime,
+    // missing ⇒ 0. Gone paths are the deletion propagation the reference
+    // never does (its walk yields only existing files, main.py:62-68, so a
+    // deleted file's vector lives in Pinecone forever; SURVEY §2.7): they
+    // tombstone BOTH stores.
+    val changed = listed.filter { case (_, p, m) => m > known.get(p).fold(0L)(_._1) }
+    val gone    = known.keySet -- listed.map(_._2)
+    val scanned = listed.size.toLong
+    if (changed.isEmpty && gone.isEmpty) // empty-delta early exit (main.py:149-151)
+      return Report(scanned, 0, 0, 0, 0, dryRun)
 
-      // content of the changed files only (the reference reads a file after
-      // its mtime check, main.py:174), read from their listed statuses
-      val changedPaths = changedRows.map(_._1).toSet
-      val guarded = cache(FileScan.read(spark, listed.filter(f => changedPaths(f.getPath.toString)))
-        .join(snap.filter(isChanged).select("path", "had_vector"), Seq("path"))
-        .withColumn("too_long", TextFunctions.tokenCount(col("text")) >= maxTokens))
-      val newlyTooLong = col("too_long") && col("had_vector")
-      val g = guarded.agg(count(when(!col("too_long"), 1)), count(when(newlyTooLong, 1)),
-        count(lit(1))).head()
+    // content of the changed files only (the reference reads a file after
+    // its mtime check, main.py:174), read from their listed statuses. It
+    // is cached because the index write embeds the same rows; it is
+    // released however the run ends: a throw (e.g. the index refusing a
+    // different embedder) must not leave it cached for the session.
+    val guarded = FileScan.read(spark, changed.map(_._1))
+      .withColumn("too_long", TextFunctions.tokenCount(col("text")) >= maxTokens).cache()
+    try {
+      val verdicts =
+        if (changed.isEmpty) Map.empty[String, Boolean]
+        else guarded.select("path", "too_long").as[(String, Boolean)].collect().toMap
       // a changed file whose content the read missed would otherwise have
       // its new mtime recorded below without being indexed
-      if (g.getLong(2) != changed)
-        sys.error(s"Sync: read ${g.getLong(2)} of $changed changed files under $rootDir")
-      val okCount = g.getLong(0)
-      val tooLong = changed - okCount
+      if (changed.exists(c => !verdicts.contains(c._2)))
+        sys.error(s"Sync: read ${verdicts.size} of ${changed.size} changed files under $rootDir")
+      val tooLong = verdicts.count(_._2).toLong
+      val okCount = changed.size - tooLong
       // a dry run REPORTS pending deletions like it reports pending
       // changes — returning deleted=0 here would make `--dry-run` print
       // "no changes" while the next real run erases vectors
-      if (dryRun) return Report(scanned, changed, tooLong, 0, goneN, dryRun)
+      if (dryRun) return Report(scanned, changed.size, tooLong, 0, gone.size, dryRun)
 
       // INDEX first: upserts and erasures in one staged rewrite, skipped
       // when it would rewrite identical content. Erased are vanished files
@@ -112,34 +111,31 @@ final class Sync(
       // since too-long paths are cached with their mtime (flagged, below)
       // they no longer resurface in the delta at all, so a permanently
       // over-long doc costs nothing after its first sync.
-      val erasing = goneN > 0 || g.getLong(1) > 0
-      if (okCount > 0 || erasing) {
+      val newlyTooLong = verdicts.collect { case (p, true) if known.get(p).exists(!_._2) => p }
+      val erase = gone ++ newlyTooLong
+      if (okCount > 0 || erase.nonEmpty) {
         val vectors = guarded.filter(!col("too_long")).select(
           col("path").as("id"),
           embedder.embed(col("text")).as("embedding"),
           map().cast("map<string,string>").as("metadata"), // reference metadata is always {}
           col("mtime").as("version"))
-        val erase = snap.filter(isGone).select(col("path").as("id"))
-          .union(guarded.filter(newlyTooLong).select(col("path").as("id")))
-        index.upsert(vectors, Option.when(erasing)(erase))
+        index.upsert(vectors, Option.when(erase.nonEmpty)(erase.toSeq.toDF("id")))
       }
       // … then STATE, from the snapshot. Too-long documents are recorded
       // WITH their mtime and a too_long flag (not excluded): the flag is
       // what lets the next run's delta skip them and what distinguishes
       // "newly crossed the guard" (erase the stale vector) from "known
       // over-long" (nothing to erase). Changed paths take the guard's
-      // verdict (from the cached `guarded`, not a second content read),
-      // unchanged paths carry their previous flag; gone paths drop out.
-      // The index-before-state order keeps the crash contract: a crash
-      // between the two re-derives the same delta AND the same tombstones
-      // next run — the upsert and its erasures are idempotent
-      // (at-least-once, the main.py:185-188 commit-order contract extended
-      // to erasure).
-      state.write(snap.filter(!isGone)
-        .join(guarded.select(col("path"), col("too_long").as("verdict")), Seq("path"), "left_outer")
-        .select(col("path"), col("mtime").as("last_edit_time"),
-          coalesce(col("verdict"), col("too_long"), lit(false)).as("too_long")))
-      Report(scanned, changed, tooLong, okCount, goneN, dryRun)
-    } finally cached.foreach(_.unpersist())
+      // verdict, unchanged paths carry their previous flag; gone paths
+      // drop out. One partition, so the state stays one file however many
+      // slices the local relation would be cut into. The index-before-
+      // state order keeps the crash contract: a crash between the two
+      // re-derives the same delta AND the same tombstones next run — the
+      // upsert and its erasures are idempotent (at-least-once, the
+      // main.py:185-188 commit-order contract extended to erasure).
+      state.write(listed.map { case (_, p, m) => (p, m, verdicts.getOrElse(p, known.get(p).exists(_._2))) }
+        .toDF("path", "last_edit_time", "too_long").coalesce(1))
+      Report(scanned, changed.size, tooLong, okCount, gone.size, dryRun)
+    } finally guarded.unpersist()
   }
 }

@@ -285,8 +285,9 @@ object PipelineQueries {
     // oracle face): a standing index + state cache, one new scan where some
     // files changed (%10=0: newer mtime, new content) and some vanished
     // (%7=0) — changed rows UPSERT (J1+P2 delta → C1 merge), vanished rows
-    // DELETE (Delta.deleted anti-join), exactly the operator composition
-    // Sync.run performs against the vector index. The oracle recomputes the
+    // DELETE (Delta.deleted anti-join): the set-oriented form of the delta
+    // Sync.run classifies on the driver and applies to the vector index
+    // (one merge with its erasures). The oracle recomputes the
     // surviving merged state from scratch; hash equality = incremental
     // upsert+delete ≡ rebuild.
     "q262_sync_delete_propagation" -> Q(

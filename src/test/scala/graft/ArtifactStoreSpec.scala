@@ -13,7 +13,7 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private def freshRoot(name: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_artifact_spec")
+    val dir = tempDir("graft_artifact_spec")
     s"$dir/$name"
   }
 
@@ -77,7 +77,7 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestSession {
 
   test("gc sweeps stale fingerprint generations of the SAME input dir on build") {
     // mimic rootFor's layout: <base>/<dirSan>-<fp>/<name>
-    val base = java.nio.file.Files.createTempDirectory("graft_artifact_gc").toString
+    val base = tempDir("graft_artifact_gc").toString
     val oldGen = s"$base/testdata_sf001-aaaa11/idx_v1"
     val curGen = s"$base/testdata_sf001-bbbb22/idx_v1"
     val otherDir = s"$base/testdata_sf01-cccc33/idx_v1"
@@ -102,7 +102,7 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestSession {
     // is complete (one tag across all part files, never interleaved), and
     // both processes make progress. A missing live dir afterwards is an
     // allowed (documented) outcome; integrity is conditional on presence.
-    val dir = java.nio.file.Files.createTempDirectory("graft_swap_race").toString
+    val dir = tempDir("graft_swap_race").toString
     val live = s"$dir/live"
     val javaBin = System.getProperty("java.home") + "/bin/java"
     def codeSource(c: Class[_]): String =

@@ -28,7 +28,7 @@ class ChunkParamContractSpec extends AnyFunSuite with SparkTestSession {
   // ArtifactStore fingerprint ⇒ an artifact generation no other suite (or
   // earlier run) can have populated
   private lazy val freshDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_chunk_contract")
+    val d = tempDir("graft_chunk_contract")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
       d.resolve("documents.parquet"))

@@ -331,7 +331,7 @@ class IndexErasureSpec extends AnyFunSuite with SparkTestSession {
     // listing, resurrecting the purged id through the gap. The schedule
     // below is exactly that adversarial window: ONE mid-stream purge, NO
     // post-child purge — any surviving 42-reference is a lock failure.
-    val dir = java.nio.file.Files.createTempDirectory("graft_purge_race").toString
+    val dir = tempDir("graft_purge_race").toString
     val root = s"$dir/hits"
     ArtifactStore.appendBatchIfAbsent(spark, root, 0L)(
       Seq((42L, 7L), (50L, 9L)).toDF("test_id", "train_id"))

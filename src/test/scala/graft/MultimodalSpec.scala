@@ -157,7 +157,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "m")
     val inline = Multimodal.frameAlignSpansPerceptual(spark, df, frameBytes = 128,
       minRun = 2, maxHamming = 3).collect().map(_.toSeq).toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fh_rt").toString
+    val tmp = tempDir("graft_fh_rt").toString
     Multimodal.frameHashes(spark, df, frameBytes = 128, idCol = "doc_id", mediaCol = "m")
       .write.mode("overwrite").parquet(tmp)
     val roundTripped = Multimodal.frameAlignSpansPerceptualFromHashes(

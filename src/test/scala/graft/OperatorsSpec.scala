@@ -2014,7 +2014,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestSession {
       "a non-final shard cannot close far below budget (only the straddling doc spills)")
     assert(m.map(_.getAs[Long]("n_docs")).sum === docs.count())
     // physical roundtrip: write → read-back audit reproduces the manifest
-    val out = java.nio.file.Files.createTempDirectory("graft_export_spec").toString
+    val out = tempDir("graft_export_spec").toString
     val written = Export.writeShards(docs, "doc_id", "text", "source", budget, out)
     val dirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("shard_id="))
     assert(dirs.length === m.length, "one hive directory per shard")

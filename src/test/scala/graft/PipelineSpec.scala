@@ -469,8 +469,10 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
           s.requiredSchema.fieldNames.contains("content") => reads.add(s)
       case _ =>
     }
+    val executions = new java.util.concurrent.atomic.AtomicInteger
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        executions.incrementAndGet()
         qe.analyzed.foreach {
           case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toUri.getPath == staging =>
             writes.incrementAndGet()
@@ -478,19 +480,111 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
         }
         contentScans(qe.executedPlan)
       }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
     }
-    spark.listenerManager.register(listener)
-    val r = try sync.run(spark) finally {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      spark.listenerManager.unregister(listener)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
+    /** The cycle's report, SQL executions and Spark jobs. */
+    def counted(run: => sync.Report): (sync.Report, Int, Int) = {
+      executions.set(0)
+      jobs.set(0)
+      spark.listenerManager.register(listener)
+      spark.sparkContext.addSparkListener(jobListener)
+      try {
+        val r = run
+        org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
+        (r, executions.get, jobs.get)
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.sparkContext.removeSparkListener(jobListener)
+      }
+    }
+    val (r, cycleRuns, _) = counted(sync.run(spark))
     assert(r.changed === 1 && r.indexed === 1 && r.deleted === 1)
     assert(writes.get === 1, "one staged index rewrite per cycle")
     import scala.jdk.CollectionConverters._
     val bytesRead = reads.asScala.toSeq.map(_.metrics("filesSize").value).sum
     assert(reads.size === 1 && bytesRead === Files.size(edited),
       s"${reads.size} content scans read $bytesRead bytes for a ${Files.size(edited)}-byte delta")
+    // state read, content read, index write, state write
+    assert(cycleRuns <= 4, s"$cycleRuns SQL executions for a one-file cycle")
+    // the state read alone, one job: no join, no cached frame
+    val (same, sameRuns, sameJobs) = counted(sync.run(spark))
+    assert(same.changed === 0 && sameRuns === 1 && sameJobs === 1,
+      s"$sameRuns SQL executions and $sameJobs jobs for an unchanged cycle")
+    assert(new java.io.File(state).listFiles().count(_.getName.endsWith(".parquet")) === 1,
+      "the state write must not split state into more files")
+  }
+
+  /** Every file under `dir`, by relative name, with its bytes. */
+  private def fileTree(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val tree = Files.walk(root)
+    try tree.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally tree.close()
+  }
+
+  test("Sync: a missing rootDir throws and leaves state and index byte-identical") {
+    val root  = mkCorpus()
+    val state = tempDir("graft_rs").resolve("state").toString
+    val index = tempDir("graft_ri").resolve("index").toString
+    assert(new Sync(root.toString, state, index, HashingEmbedder(8)).run(spark).indexed === 3)
+    val before = (fileTree(state), fileTree(index))
+    // an unmounted or misspelled corpus is not an empty one: classified
+    // against state, an empty listing would erase every vector
+    val missing = new Sync(root.resolve("missing").toString, state, index, HashingEmbedder(8))
+    intercept[java.io.FileNotFoundException] { missing.run(spark) }
+    intercept[java.io.FileNotFoundException] { missing.run(spark, dryRun = true) }
+    assert((fileTree(state), fileTree(index)) === before)
+  }
+
+  test("Sync: rootDir is a literal path, not a glob") {
+    val base = tempDir("graft_lit")
+    // as a glob, `c[1]` names `c1` and not itself
+    Seq("c[1]", "c1").foreach { d =>
+      Files.createDirectories(base.resolve(d))
+      Files.writeString(base.resolve(d).resolve("n.md"), s"a note in $d")
+    }
+    val state = tempDir("graft_ls").resolve("state").toString
+    val index = tempDir("graft_li").resolve("index").toString
+    val sync  = new Sync(base.resolve("c[1]").toString, state, index, HashingEmbedder(8))
+    val r = sync.run(spark)
+    assert((r.scanned, r.changed, r.indexed) === ((1, 1, 1)))
+    val id = "file:" + base.resolve("c[1]/n.md").toAbsolutePath.normalize.toString
+    assert(new VectorIndex(index, 8).read(spark).select("id").as[String].collect().toSeq === Seq(id))
+    assert(new StateStore(state).read(spark).select("path").as[String].collect().toSeq === Seq(id))
+    assert(sync.run(spark).changed === 0)
+  }
+
+  test("Sync: a two-column state written before the too_long flag") {
+    val root  = mkCorpus()
+    val names = Seq("a.md", "sub/b.md", "sub/nested/c.md")
+    names.foreach(f => touch(root.resolve(f), 1000000L))
+    val state = tempDir("graft_os").resolve("state").toString
+    val index = tempDir("graft_oi").resolve("index").toString
+    val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
+    assert(sync.run(spark).indexed === 3)
+    // the reference's (path, last_edit_time) table
+    val legacy = spark.read.parquet(state).select("path", "last_edit_time").as[(String, Long)].collect()
+    legacy.toSeq.toDF("path", "last_edit_time").write.mode("overwrite").parquet(state)
+    assert(spark.read.parquet(state).columns.toSeq === Seq("path", "last_edit_time"))
+
+    val same = sync.run(spark)
+    assert((same.changed, same.deleted, same.indexed) === ((0, 0, 0)))
+    // an indexed doc pushed over the guard loses its vector
+    Files.writeString(root.resolve("a.md"), Seq.fill(9000)("w").mkString(" "))
+    touch(root.resolve("a.md"), 1000100L)
+    val grown = sync.run(spark)
+    assert((grown.changed, grown.skippedTooLong, grown.indexed, grown.deleted) === ((1, 1, 0, 0)))
+    assertMirrors(root, state, index, names, Set("a.md"))
+    assert(spark.read.parquet(state).columns.toSeq === Seq("path", "last_edit_time", "too_long"))
+    assert(sync.run(spark).changed === 0)
   }
 
   test("Sync lists a wide corpus without a Spark listing job") {

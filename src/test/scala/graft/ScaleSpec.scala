@@ -89,7 +89,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestSession {
   /** 50 four-dim vectors in parquet: over a local relation the optimizer
     * would evaluate the projections itself and no ProjectExec would remain. */
   private lazy val vectorCorpus = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vec_plan").resolve("corpus").toString
+    val dir = tempDir("graft_vec_plan").resolve("corpus").toString
     val rnd = new scala.util.Random(5)
     (0L until 50L).map(i => (i, Array.fill(4)(rnd.nextGaussian()))).toDF("id", "v")
       .write.parquet(dir)
@@ -173,7 +173,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestSession {
 
   test("partitioned sink: filters prune partitions at the scan") {
     import graft.sources.PartitionedSink
-    val out = java.nio.file.Files.createTempDirectory("graft_part").resolve("events").toString
+    val out = tempDir("graft_part").resolve("events").toString
     PartitionedSink.writePartitioned(
       Tables.events(spark, sfDir).select("event_id", "user_id", "value", "event_type"),
       out, Seq("event_type"))
@@ -369,7 +369,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestSession {
     // pushed-down predicate then skips most groups INSIDE the files — the
     // file-level analog of Layout.zorderAudit's block spans, proven against
     // the actual scan metric rather than claimed
-    val out = java.nio.file.Files.createTempDirectory("graft_rg").resolve("ev").toString
+    val out = tempDir("graft_rg").resolve("ev").toString
     // enough rows for many row groups (the sf0.001 fixtures fit in one)
     val total = 200000L
     val ev = spark.range(total).select($"id".as("event_id"), $"id".cast("double").as("value"))

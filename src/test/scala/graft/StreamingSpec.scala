@@ -34,9 +34,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // midpoint crosses a batch boundary and must be carried through state
     val ev  = Tables.events(spark, sfDir).select("user_id", "ts", "event_id").cache()
     val mid = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5)")).head.getLong(0)
-    val dir = Files.createTempDirectory("graft_mb")
+    val dir = tempDir("graft_mb")
     def writeHalf(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft_mb_w")
+      val tmp = tempDir("graft_mb_w")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
       val dst  = dir.resolve(name)
@@ -67,9 +67,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     import java.nio.file.attribute.FileTime
     import java.sql.Timestamp
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ooo")
+    val dir = tempDir("graft_ooo")
     def writeFile(rows: Seq[(Long, Long, Long)], name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft_ooo_w")
+      val tmp = tempDir("graft_ooo_w")
       rows.map { case (u, s, e) => (u, new Timestamp(s * 1000L), e) }
         .toDF("user_id", "ts", "event_id")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -164,9 +164,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // two files -> maxFilesPerTrigger=1 forces two deltas; most months get
     // contributions from BOTH batches, so the fold must actually merge
     val o = Tables.orders(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_inc_mb")
+    val dir = tempDir("graft_inc_mb")
     def writeHalf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_inc_w")
+      val tmp = tempDir("graft_inc_w")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
@@ -205,9 +205,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     //   RE-EMITS. Across runs key 1 appears TWICE — the price of bounded
     //   state, and why distinctCustomersBounded deduplicates before the
     //   DISTINCT oracle.
-    val dir = Files.createTempDirectory("graft_wm")
+    val dir = tempDir("graft_wm")
     def writeFile(rows: Seq[(Long, Date)], name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft_wm_w")
+      val tmp = tempDir("graft_wm_w")
       rows.toDF("o_custkey", "o_orderdate").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
@@ -218,8 +218,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     def day(d: Int) = new Date(d * 86400000L)
     writeFile(Seq((1L, day(1))), "a.parquet", 1000000000000L)
     writeFile(Seq((2L, day(2000))), "b.parquet", 1000000100000L)
-    val ckpt = Files.createTempDirectory("graft_wm_ckpt").toString
-    val out = Files.createTempDirectory("graft_wm_out").toString
+    val ckpt = tempDir("graft_wm_ckpt").toString
+    val out = tempDir("graft_wm_out").toString
     def drainRun() = graft.streaming.StreamingAgg.boundedDedupDrain(
         spark, dir.toString, schemaFrom = dir.resolve("a.parquet").toString,
         glob = "*.parquet", delay = "30 days", maxFilesPerTrigger = Some(1),
@@ -239,9 +239,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // deltas; most nations get counts from BOTH batches, so the fold must
     // actually merge before the z-gate
     val c = Tables.customer(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_drift_mb")
+    val dir = tempDir("graft_drift_mb")
     def writeHalf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_drift_w")
+      val tmp = tempDir("graft_drift_w")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
@@ -312,9 +312,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   test("StreamingSync: incremental file discovery, checkpointed, idempotent") {
     import java.nio.file.Files
-    val root  = Files.createTempDirectory("graft_ss")
-    val index = Files.createTempDirectory("graft_ss_i").resolve("index").toString
-    val ckpt  = Files.createTempDirectory("graft_ss_c").resolve("ckpt").toString
+    val root  = tempDir("graft_ss")
+    val index = tempDir("graft_ss_i").resolve("index").toString
+    val ckpt  = tempDir("graft_ss_c").resolve("ckpt").toString
     Files.writeString(root.resolve("a.md"), "alpha beta gamma")
     Files.writeString(root.resolve("b.md"), "delta epsilon zeta")
     Files.writeString(root.resolve("skip.txt"), "not markdown")
@@ -345,9 +345,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     // split arbitrarily (odd/even), so most registers see updates from BOTH
     // batches and the final state must still equal the one-pass batch sketch
     val ev = Tables.events(spark, sfDir).select("event_id")
-    val dir = Files.createTempDirectory("graft_hll_mb")
+    val dir = tempDir("graft_hll_mb")
     def writeHalf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_hll_w")
+      val tmp = tempDir("graft_hll_w")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
@@ -365,8 +365,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   test("mergeCountDelta: keyed state-table fold is idempotent under batch replay") {
     import spark.implicits._
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_merge_state").resolve("st").toString
+    val statePath = tempDir("graft_merge_state").resolve("st").toString
     def delta(rows: (Long, Long)*) = rows.toSeq.toDF("g", "next_n")
     def snapshot(): Map[Long, Long] = spark.read.parquet(statePath)
       .collect().map(r => r.getAs[Long]("g") -> r.getAs[Long]("next_n")).toMap
@@ -396,7 +395,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       5L -> "pack my box with five dozen liquor jugs before the long journey away",
       10L -> "nothing here resembles anything in the training corpus at all truly")
     val docs = texts.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_fixture").toString
+    val dir = tempDir("graft_stream_fixture").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def run() = graft.streaming.StreamingDedup
       .streamMaintainedNearDupHits(spark, dir, shingleSize = 3, numHashes = 32,
@@ -420,7 +419,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val texts = Seq(
       1L -> "a b c d e", 2L -> "f g h i j k l", 3L -> "m n o p",
       4L -> "q r s", 5L -> "t u v w x y", 6L -> "z a b c")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_pack").toString
+    val dir = tempDir("graft_stream_pack").toString
     val staging = s"$dir/__stage"
     texts.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(staging)
     val part = new java.io.File(staging).listFiles()
@@ -445,7 +444,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (1L, "a b c d e", "web"), (2L, "f g h i j k l", "web"),
       (3L, "m n o p", "book"), (4L, "q r s", "web"),
       (5L, "t u v w x y", "book"), (6L, "z a b c", "web"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_manifest").toString
+    val dir = tempDir("graft_stream_manifest").toString
     val staging = s"$dir/__stage"
     texts.toDF("doc_id", "text", "source").coalesce(1).write.mode("overwrite").parquet(staging)
     val part = new java.io.File(staging).listFiles()
@@ -509,7 +508,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       10L -> base,
       20L -> base.split(' ').reverse.mkString(" "),
       30L -> "nothing here resembles anything in the standing corpus at all truly")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_xmodal").toString
+    val dir = tempDir("graft_stream_xmodal").toString
     // streamTable globs the literal file name, so the fixture must be a
     // single FILE like the driver-written tables, not a Spark directory
     val staging = s"$dir/__stage"
@@ -542,7 +541,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("drain restores spark.sql.shuffle.partitions when the stream fails") {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.StreamingQueryException
     val before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -556,14 +554,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
     assert(spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_spec_failing")).isEmpty)
-    val root = Files.createTempDirectory("graft_spec_failing")
-    try {
-      val sink = Some((root.resolve("out").toString, root.resolve("ckpt").toString))
-      intercept[StreamingQueryException] {
-        StreamingAgg.drain(failing, "graft_spec_failing", "append", fileSink = sink)
-      }
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-    } finally graft.streaming.StreamingDrift.deleteTempDir(root)
+    val root = tempDir("graft_spec_failing")
+    val sink = Some((root.resolve("out").toString, root.resolve("ckpt").toString))
+    intercept[StreamingQueryException] {
+      StreamingAgg.drain(failing, "graft_spec_failing", "append", fileSink = sink)
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
   }
 
   test("drainSeeded runs onBatch once per distinct non-empty batch key") {
