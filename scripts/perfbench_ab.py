@@ -10,7 +10,7 @@ Usage, from the root of a checkout:
 
     mkdir ../parent && git archive HEAD~1 | tar -x -C ../parent
     python3 scripts/perfbench_ab.py --a ../parent --b . --workload cron-delta \\
-        --seeds 11-20 [--seconds 20] [--trace 0]
+        --seeds 11-20 [--seconds 20] [--trace 0] [--claim op_p50_s]
 
 Each side builds itself on its first run (see perfbench/README.md). Metric
 names and directions come from B's BENCHMARK.json: its `end_to_end` list,
@@ -18,6 +18,12 @@ or with `--trace 1` its `per_layer` list, since a traced run prints only
 the per-layer figures. Steal is read from /proc/stat around each run (0
 where that file does not exist). A run that prints no result line is
 reported as failed, followed by the last lines of its stderr.
+
+`--claim <metric>` ends with the acceptance verdict for a claimed gain on
+that metric: B must win at least 9 in 10 of the pairs, and B's median must
+beat A's by more than A's interquartile range. Every other `end_to_end`
+metric is then checked against its `bound` in BENCHMARK.json: B's median
+may be worse than A's by at most that fraction of A's median.
 """
 import argparse
 import json
@@ -27,6 +33,7 @@ import subprocess
 import sys
 
 STDERR_TAIL = 20  # stderr lines shown for a run that gave no result line
+CLAIM_WIN_SHARE = 0.9  # share of pairs a claimed gain must win
 
 
 def parse_seeds(text):
@@ -83,11 +90,14 @@ def main():
     ap.add_argument("--seeds", required=True, help="e.g. 11-20 or 3,5,8")
     ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--claim", help="end-to-end metric whose gain B claims; prints the verdict")
     a = ap.parse_args()
 
     with open(os.path.join(a.b, "BENCHMARK.json")) as f:
         bench = json.load(f)
     metrics = [(m["name"], m["better"]) for m in bench["per_layer" if a.trace else "end_to_end"]]
+    if a.claim and a.claim not in dict(metrics):
+        ap.error(f"--claim {a.claim}: not among the {'per_layer' if a.trace else 'end_to_end'} metrics")
     sides = {"A": a.a, "B": a.b}
     results = {"A": {}, "B": {}}
 
@@ -106,6 +116,7 @@ def main():
 
     paired = sorted(set(results["A"]) & set(results["B"]))
     print(f"\nmetric: A median [q1, q3] | B median [q1, q3] | B/A - 1 | B wins of pairs with the metric")
+    summary = {}
     for name, better in metrics:
         xa = [results["A"][s][name] for s in paired if name in results["A"][s]]
         xb = [results["B"][s][name] for s in paired if name in results["B"][s]]
@@ -120,6 +131,37 @@ def main():
         rel = mb / ma - 1 if ma else float("nan")
         print(f"{name}: {ma:.4g} [{a1:.4g}, {a3:.4g}] | {mb:.4g} [{b1:.4g}, {b3:.4g}] "
               f"| {rel:+.1%} | {wins} of {len(both)}")
+        summary[name] = (ma, mb, a3 - a1, sign, wins, len(both))
+    if a.claim:
+        verdict(a.claim, summary, bench)
+
+
+def verdict(claim, summary, bench):
+    """Prints whether the runs accept a claimed gain on `claim`, and whether
+    every other end-to-end metric stays within its bound."""
+    print(f"\nverdict for a claimed gain on {claim}:")
+    ok = claim in summary
+    if not ok:
+        print(f"  {claim}: no pair reports it: REJECTED")
+    else:
+        ma, mb, iqr, sign, wins, n = summary[claim]
+        gap = sign * (ma - mb)  # > 0 when B is better
+        won, wide = wins >= CLAIM_WIN_SHARE * n, gap > iqr
+        ok = won and wide
+        print(f"  {claim}: B won {wins} of {n} pairs (needs {CLAIM_WIN_SHARE:.0%}): "
+              f"{'yes' if won else 'no'}; median gain {gap:.4g} vs A's IQR {iqr:.4g}: "
+              f"{'yes' if wide else 'no'}")
+    for m in bench["end_to_end"]:
+        name = m["name"]
+        if name == claim or name not in summary:
+            continue
+        ma, mb, _, sign, _, _ = summary[name]
+        worse = sign * (mb - ma) / abs(ma) if ma else float("nan")
+        within = worse <= m["bound"]
+        ok = ok and within
+        print(f"  {name}: B's median worse by {worse:+.1%} "
+              f"(bound {m['bound']:.0%}): {'within' if within else 'OUTSIDE'}")
+    print(f"  => {'ACCEPTED' if ok else 'REJECTED'}")
 
 
 if __name__ == "__main__":

@@ -12,6 +12,11 @@ import org.apache.spark.sql.DataFrame
   * Scale design: union + single hash shuffle on the key + per-key `row_number`
   * — one shuffle total, map-side free, AQE handles skewed keys. No driver-side
   * state, no per-row RPC (the reference does one RPC per row).
+  *
+  * The registered queries use it (q29, q262). The vector index does not:
+  * its sync knows the keys it touches on the driver, so
+  * [[graft.pipeline.VectorIndex.upsert]] replaces by those keys in one
+  * narrow stage, with no shuffle and no version precedence.
   */
 object Upsert {
 

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * degrades gracefully to a sort-merge join, with no code change.
   *
   * [[Sync]] does not use these joins: it already holds the corpus listing
-  * on the driver, so it collects state into a map and applies the same
-  * rule there (one Spark action instead of a join, an aggregate and a
-  * cached frame per cycle); its size limit is in `Sync.run`.
+  * on the driver, so it loads state into a map there
+  * ([[StateStore.load]]) and applies the same rule (no Spark job instead
+  * of a join, an aggregate and a cached frame per cycle); its size limit
+  * is in `Sync.run`.
   */
 object Delta {
 

@@ -1,21 +1,26 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 
 /** File-state cache (SURVEY.md §2.1 S4/S7): the Spark analog of the
   * reference's SQLite table `files(path TEXT PRIMARY KEY, last_edit_time
   * INTEGER)` (reference `vectrekker/main.py:96-102`) — a parquet-backed keyed
   * state table.
   *
-  * Writes go through a staging directory + atomic-ish swap so the store can be
-  * rewritten from a plan that read it (Spark cannot overwrite an input path
-  * in-flight). State is tiny relative to the corpus (one row per file), so a
-  * snapshot rewrite per sync is the right trade at any scale: [[Sync]]
-  * reads it whole into a driver map in one action, and writes it back from
-  * the (path, mtime) listing and the guard verdicts it collected, as one
-  * local relation, reading no file and no index.
+  * State is tiny relative to the corpus (one row per file), so [[Sync]]
+  * handles it on the driver: [[load]] reads the whole table into a map and
+  * [[save]] writes the next snapshot as one parquet file, both through the
+  * Parquet API, with no Spark job. The file is staged and swapped in
+  * ([[StagedSwap]]), so a crash never leaves a half-written state. [[read]]
+  * gives the same table as a DataFrame, for queries and checks.
   */
 final class StateStore(path: String) {
 
@@ -32,6 +37,12 @@ final class StateStore(path: String) {
     StructField("last_edit_time", LongType, nullable = false),
     StructField("too_long", BooleanType, nullable = true)))
 
+  private val parquetSchema: MessageType = Types.buildMessage()
+    .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("path")
+    .required(PrimitiveTypeName.INT64).named("last_edit_time")
+    .optional(PrimitiveTypeName.BOOLEAN).named("too_long")
+    .named("spark_schema")
+
   def read(spark: SparkSession): DataFrame = {
     val p  = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -39,20 +50,49 @@ final class StateStore(path: String) {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  /** Snapshot-overwrite with staging swap (safe when `df` reads this store;
-    * renames checked + rollback via [[StagedSwap]]).
+  /** The state as `path -> (last_edit_time, too_long)`, read on the driver
+    * from every data file of the table (as [[read]] would: names Spark
+    * hides, such as `_SUCCESS` and `.crc` files, are skipped). A missing
+    * table is empty; a state written before the flag existed, or a null
+    * flag, reads as not over-long.
     */
-  def write(df: DataFrame): Unit = {
-    val spark = df.sparkSession
-    val p     = new Path(path)
-    val tmp   = new Path(path + ".staging")
-    val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def load(spark: SparkSession): Map[String, (Long, Boolean)] = {
+    val p    = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs   = p.getFileSystem(conf)
+    if (!fs.exists(p)) return Map.empty
+    val rows = Map.newBuilder[String, (Long, Boolean)]
+    // the data files Spark's file index reads: no hidden name, and no
+    // leading `_` (it keeps `_metadata` names for Parquet, but never reads them)
+    def data(name: String) = !GraftSqlBridge.hiddenPathName(name) && !name.startsWith("_")
+    fs.listStatus(p).filter(s => s.isFile && data(s.getPath.getName))
+      .foreach { s =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), s.getPath).withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
+          val flagged = g.getType.containsField("too_long") && g.getFieldRepetitionCount("too_long") > 0 &&
+            g.getBoolean("too_long", 0)
+          rows += g.getString("path", 0) -> ((g.getLong("last_edit_time", 0), flagged))
+        } finally reader.close()
+      }
+    rows.result()
+  }
+
+  /** Replaces the state with `rows` of (path, last_edit_time, too_long),
+    * written on the driver as one parquet file and swapped in.
+    */
+  def save(spark: SparkSession, rows: Iterable[(String, Long, Boolean)]): Unit = {
+    val p    = new Path(path)
+    val tmp  = new Path(path + ".staging")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs   = p.getFileSystem(conf)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    val withFlag =
-      if (df.columns.contains("too_long")) df
-      else df.withColumn("too_long", org.apache.spark.sql.functions.lit(false))
-    withFlag.select("path", "last_edit_time", "too_long")
-      .write.mode("overwrite").parquet(tmp.toString)
+    val writer = ExampleParquetWriter.builder(new Path(tmp, "part-00000.snappy.parquet"))
+      .withConf(conf).withType(parquetSchema).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val groups = new SimpleGroupFactory(parquetSchema)
+    try rows.foreach { case (file, mtime, tooLong) =>
+      writer.write(groups.newGroup().append("path", file).append("last_edit_time", mtime)
+        .append("too_long", tooLong))
+    } finally writer.close()
     StagedSwap.swap(fs, tmp, p, new Path(path + ".old"))
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * corpus files incrementally (checkpointed file log), `foreachBatch` embeds
   * and upserts each micro-batch into the vector index. File-source
   * exactly-once (checkpoint) + keyed idempotent upsert => effectively
-  * exactly-once end to end.
+  * exactly-once end to end. Each micro-batch's paths, collected on the
+  * driver, key its index write.
   *
   * Scope note (documented divergence from the batch [[Sync]]): Spark's file
   * source keys discovery by PATH — in-place *modifications* are not re-read.
@@ -49,6 +50,9 @@ final class StreamingSync(
         decode(col("content"), "UTF-8").as("text"))
 
     graft.streaming.StreamingAgg.drainEach(stream, Some(checkpointDir)) { (batch, _) =>
+      // the batch's paths key the index write: an over-long file's stale
+      // vector goes too
+      val ids = batch.select("path").collect().map(_.getString(0)).toSet
       val ok = batch
         .withColumn("n_tokens", graft.functions.TextFunctions.tokenCount(col("text")))
         .filter(col("n_tokens") < maxTokens)
@@ -57,7 +61,7 @@ final class StreamingSync(
         embedder.embed(col("text")).as("embedding"),
         map().cast("map<string,string>").as("metadata"),
         col("mtime").as("version"))
-      index.upsert(vectors)
+      index.upsert(vectors, ids)
       batches += 1
     }
     batches

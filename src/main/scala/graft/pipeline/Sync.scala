@@ -29,25 +29,28 @@ final class Sync(
 
   /** One cycle. Its Spark work follows the delta, not the corpus: the
     * corpus is listed once, on the driver, and classified there against
-    * state read in one action; only changed files' content is read, from
+    * state loaded on the driver; only changed files' content is read, from
     * their listed statuses, and the guard's verdicts come back in one
-    * action; the index is rewritten at most once (upserts and erasures in
-    * one staged swap); state is written from the listing snapshot. An
-    * unchanged cycle is one Spark action, a cycle with edits four.
+    * action; the index is rewritten at most once, as one narrow stage keyed
+    * by the changed and erased paths; state is saved on the driver from
+    * the listing snapshot. An unchanged cycle runs no Spark job, a cycle
+    * with edits two (the guard's collect and the index write).
     *
     * Size limit: the driver holds one `FileStatus` per listed file, as
-    * Spark's own file index did, and one state row per file; the state
-    * write's snapshot rides in the plan as a local relation of (path,
-    * mtime, flag) rows. The walk is sequential: it trades Spark's parallel
-    * listing, which starts a job once a directory has more than 32
-    * subdirectories, for no job at all. On a remote store with thousands
-    * of directories the parallel listing can be faster. Measured at
-    * `local[4]` on a 4-vCPU Xeon VM with 20 000 files in 200 directories,
-    * two fresh JVMs each: a cold sync took 27.1–29.6 s, an all-files-
-    * touched cycle 12.4–13.4 s, an unchanged cycle 1.1–1.3 s and a one-file
-    * cycle 1.9–2.1 s, against 32.6 s, 14.7–16.0 s, 1.9–2.0 s and 3.0–3.3 s
-    * when the classification, the guard counts and the state write ran as
-    * Spark joins.
+    * Spark's own file index did, and one state row per file; the keys of
+    * the index write (every changed and every erased path) ride in its
+    * plan as literal sets, so a cycle that touches the whole corpus plans
+    * one string literal per file. The walk is sequential: it trades
+    * Spark's parallel listing, which starts a job once a directory has
+    * more than 32 subdirectories, for no job at all. On a remote store
+    * with thousands of directories the parallel listing can be faster.
+    * Measured at `local[4]` on a 4-vCPU Xeon VM with 20 000 files in 200
+    * directories (a dim-64 embedder, a fresh JVM per run, heavy and
+    * varying steal): a cold sync took 27.2–41.1 s, an all-files-touched
+    * cycle 7.0–10.9 s, an unchanged cycle 0.4–0.9 s and a one-file cycle
+    * 1.4–2.4 s, against 25.6–32.9 s, 14.3–18.4 s, 1.1–1.3 s and 1.8–2.7 s
+    * when the index write merged versions through a shuffle and state went
+    * through Spark jobs.
     */
   def run(spark: SparkSession, dryRun: Boolean = false): Report = {
     import graft.functions.TextFunctions
@@ -63,11 +66,8 @@ final class Sync(
     // empty listing would tombstone every indexed file.
     val listed = FileScan.list(spark, rootDir, pathRegex)
       .map(f => (f, f.getPath.toString, Math.floorDiv(f.getModificationTime, 1000L)))
-    // state, read once: path -> (mtime, too_long); a state written before
-    // the flag existed reads null, i.e. not over-long
-    val known = state.read(spark)
-      .select(col("path"), col("last_edit_time"), coalesce(col("too_long"), lit(false)))
-      .as[(String, Long, Boolean)].collect().map { case (p, t, l) => p -> (t, l) }.toMap
+    // state, read once on the driver: path -> (mtime, too_long)
+    val known = state.load(spark)
     // the delta (main.py:143-147): strictly newer than the cached mtime,
     // missing ⇒ 0. Gone paths are the deletion propagation the reference
     // never does (its walk yields only existing files, main.py:62-68, so a
@@ -101,9 +101,12 @@ final class Sync(
       // "no changes" while the next real run erases vectors
       if (dryRun) return Report(scanned, changed.size, tooLong, 0, gone.size, dryRun)
 
-      // INDEX first: upserts and erasures in one staged rewrite, skipped
-      // when it would rewrite identical content. Erased are vanished files
-      // AND files that NEWLY crossed the token guard: "filtered, not
+      // INDEX first: upserts and erasures in one staged rewrite keyed by
+      // the changed and the erased paths, skipped when it would rewrite
+      // identical content. A changed path's row replaces the stored one
+      // whatever its version: a vector that a crashed cycle wrote from
+      // later content must not outlive that content. Erased are vanished
+      // files AND files that NEWLY crossed the token guard: "filtered, not
       // crashed" applies to the INDEX too — an edit that pushes an indexed
       // doc over the guard supersedes its old content, so the stale
       // pre-edit vector must not stay retrievable. NEWLY is load-bearing
@@ -119,7 +122,7 @@ final class Sync(
           embedder.embed(col("text")).as("embedding"),
           map().cast("map<string,string>").as("metadata"), // reference metadata is always {}
           col("mtime").as("version"))
-        index.upsert(vectors, Option.when(erase.nonEmpty)(erase.toSeq.toDF("id")))
+        index.upsert(vectors, verdicts.keySet, erase)
       }
       // … then STATE, from the snapshot. Too-long documents are recorded
       // WITH their mtime and a too_long flag (not excluded): the flag is
@@ -127,14 +130,13 @@ final class Sync(
       // "newly crossed the guard" (erase the stale vector) from "known
       // over-long" (nothing to erase). Changed paths take the guard's
       // verdict, unchanged paths carry their previous flag; gone paths
-      // drop out. One partition, so the state stays one file however many
-      // slices the local relation would be cut into. The index-before-
-      // state order keeps the crash contract: a crash between the two
-      // re-derives the same delta AND the same tombstones next run — the
-      // upsert and its erasures are idempotent (at-least-once, the
-      // main.py:185-188 commit-order contract extended to erasure).
-      state.write(listed.map { case (_, p, m) => (p, m, verdicts.getOrElse(p, known.get(p).exists(_._2))) }
-        .toDF("path", "last_edit_time", "too_long").coalesce(1))
+      // drop out. The index-before-state order keeps the crash contract: a
+      // crash between the two re-derives the same delta AND the same
+      // tombstones next run — the upsert and its erasures are idempotent
+      // (at-least-once, the main.py:185-188 commit-order contract extended
+      // to erasure).
+      state.save(spark,
+        listed.map { case (_, p, m) => (p, m, verdicts.getOrElse(p, known.get(p).exists(_._2))) })
       Report(scanned, changed.size, tooLong, okCount, gone.size, dryRun)
     } finally guarded.unpersist()
   }

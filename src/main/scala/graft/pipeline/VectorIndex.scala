@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.operators.Upsert
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   * similarity metric is a property of the *search* operator
   * ([[graft.operators.TopK]]), not of storage. Dimension is enforced at write
   * (validation filter), matching the index-DDL dimension contract.
+  *
+  * Every write is one [[upsert]] keyed by ids the caller names ([[Sync]]
+  * holds them on the driver already): a narrow rewrite plus a staged swap,
+  * with no merge of versions — the reference's upsert replaces by id too.
   */
 final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] = None) {
 
@@ -46,44 +50,55 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  /** Rows whose embedding length violates the index dimension. */
-  def invalid(vectors: DataFrame): DataFrame =
-    vectors.filter(size(col("embedding")) =!= dim)
-
-  /** Last-writer-wins upsert of `vectors` (id, embedding, metadata, version);
-    * one key-shuffle, no per-row RPC (the reference does one upsert RPC per
-    * vector, `main.py:185`). Staging swap as in [[StateStore]].
+  /** The index's one write: the index without every row whose id is in
+    * `ids` or `erase`, plus the rows of `vectors` (id, embedding, metadata,
+    * version) whose id is in `ids` and not in `erase` and whose embedding
+    * has the index dimension. The caller names the keys it touches, so the
+    * write is a keyed replace: a row of `vectors` replaces the stored row
+    * of its id whatever their versions, and an id in both sets ends up
+    * erased. `vectors` holds at most one row per id.
     *
-    * `deletes` (an `id` column) are erased in the same rewrite: the result
-    * equals this upsert followed by [[delete]] of the same ids, so an id in
-    * both sets ends up erased — for one staged swap instead of two.
+    * Both key sets ride in the plan as literal sets, so the rewrite is one
+    * narrow stage (a filtered index scan unioned with the new rows, no
+    * shuffle, no window), then the staged swap. Its output keeps the
+    * index's file layout: the union is coalesced to the partition count of
+    * the index scan, and a first write (no index yet, or an empty one)
+    * lets AQE size its files ([[WriteLayout.clusterBy]]). So a delta runs
+    * in as many tasks as the index scan, however large it is.
     */
-  def upsert(vectors: DataFrame, deletes: Option[DataFrame] = None): Unit = {
+  def upsert(vectors: DataFrame, ids: Set[String], erase: Set[String] = Set.empty): Unit = {
     val spark = vectors.sparkSession
     val p     = new Path(path)
     val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireSameEmbedder(fs)
-    val valid  = vectors.filter(size(col("embedding")) === dim)
-    val merged = Upsert.merge(read(spark), valid.select("id", "embedding", "metadata", "version"),
-      Seq("id"), "version")
-    writeSwapped(spark, fs, p, deletes.fold(merged)(erase(merged, _)))
+    val keep  = ids -- erase
+    val added = vectors.select("id", "embedding", "metadata", "version")
+      .filter(size(col("embedding")) === dim && col("id").isin(keep.toSeq: _*))
+    val stored = read(spark)
+    val kept   = stored.filter(!col("id").isin((ids ++ erase).toSeq: _*))
+    // the scan's partition count follows the index's files and bytes
+    val parts = stored.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.getOrElse(0)
+    val all = kept.unionByName(added)
+    writeSwapped(spark, fs, p, if (parts > 0) all.coalesce(parts) else WriteLayout.clusterBy(all))
   }
 
   /** Delete rows by key — the erase half the reference lacks entirely
     * (`main.py:62-68` walks only existing files, so a deleted file's vector
     * lives in Pinecone forever; SURVEY §2.7 flags the anti-join fix as the
-    * intended extension, landed here). One broadcast-able anti-join + the
-    * same staged swap as [[upsert]]; idempotent — re-deleting removes
-    * nothing and rewrites identical content, which is what makes the sync
-    * crash-replay (at-least-once) safe.
+    * intended extension, landed here). The ids are collected, then erased
+    * by [[upsert]]; idempotent — re-deleting removes nothing and rewrites
+    * identical content, which is what makes the sync crash-replay
+    * (at-least-once) safe.
     */
   def delete(ids: DataFrame): Unit = {
     val spark = ids.sparkSession
     val p     = new Path(path)
     val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return // nothing indexed — nothing to erase
-    requireSameEmbedder(fs)
-    writeSwapped(spark, fs, p, erase(read(spark), ids))
+    val erase = ids.select("id").collect().map(_.getString(0)).toSet
+    upsert(spark.createDataFrame(java.util.List.of[Row](), schema), Set.empty, erase)
   }
 
   // refuse to mix embedder generations: vectors hashed by a different
@@ -98,9 +113,6 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
             "rebuild the index (delete it) or keep the original embedder")
       }
     }
-
-  private def erase(rows: DataFrame, ids: DataFrame): DataFrame =
-    rows.join(ids.select("id"), Seq("id"), "left_anti")
 
   private def writeSwapped(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                            p: Path, content: DataFrame): Unit = {

@@ -8,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * excludes processes — atomic O_EXCL create), per-thread re-entrancy,
   * release-on-exception, and stale-lock breaking by rename arbitration.
   */
-class FsLockSpec extends AnyFunSuite {
+class FsLockSpec extends AnyFunSuite with SparkTestSession {
   import graft.pipeline.FsLock
 
   private val fs: FileSystem =
     FileSystem.getLocal(new Configuration()).getRawFileSystem
 
   private def freshRoot(): String =
-    s"/tmp/graft-test-fslock/${java.util.UUID.randomUUID().toString.take(8)}/r"
+    tempDir("graft_fslock").resolve("r").toString
 
   test("withLock: critical sections exclude each other (no lost updates)") {
     val root = freshRoot()

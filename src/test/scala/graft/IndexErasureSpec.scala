@@ -11,7 +11,7 @@ class IndexErasureSpec extends AnyFunSuite with SparkTestSession {
   import graft.pipeline.IndexErasure
 
   private def freshRoot(): String =
-    s"/tmp/graft-test-erasure/${java.util.UUID.randomUUID().toString.take(8)}/idx"
+    tempDir("graft_erasure").resolve("idx").toString
 
   private def buildFixture(root: String): Unit = {
     import spark.implicits._
@@ -144,7 +144,7 @@ class IndexErasureSpec extends AnyFunSuite with SparkTestSession {
   test("purgeBatches: multi-ref purge, fully-emptied batch stays readable, re-run is a no-op") {
     import spark.implicits._
     import graft.pipeline.{ArtifactStore, IndexErasure}
-    val root = s"/tmp/graft-test-erasure/${java.util.UUID.randomUUID().toString.take(8)}/hits"
+    val root = tempDir("graft_erasure").resolve("hits").toString
     ArtifactStore.appendBatchIfAbsent(spark, root, 0L)(
       Seq((1L, 10L), (2L, 11L), (3L, 10L)).toDF("test_id", "train_id"))
     ArtifactStore.appendBatchIfAbsent(spark, root, 1L)(
@@ -172,7 +172,7 @@ class IndexErasureSpec extends AnyFunSuite with SparkTestSession {
   test("purgeBatches: untouched batches' files are never rewritten") {
     import spark.implicits._
     import graft.pipeline.{ArtifactStore, IndexErasure}
-    val root = s"/tmp/graft-test-erasure/${java.util.UUID.randomUUID().toString.take(8)}/hits"
+    val root = tempDir("graft_erasure").resolve("hits").toString
     ArtifactStore.appendBatchIfAbsent(spark, root, 0L)(
       Seq((1L, 10L), (2L, 11L)).toDF("test_id", "train_id"))
     ArtifactStore.appendBatchIfAbsent(spark, root, 1L)(
@@ -226,7 +226,7 @@ class IndexErasureSpec extends AnyFunSuite with SparkTestSession {
   test("appendBatchPurged: a late batch cannot re-introduce purged references") {
     import spark.implicits._
     import graft.pipeline.{ArtifactStore, IndexErasure}
-    val root = s"/tmp/graft-test-erasure/${java.util.UUID.randomUUID().toString.take(8)}/hits"
+    val root = tempDir("graft_erasure").resolve("hits").toString
     ArtifactStore.appendBatchIfAbsent(spark, root, 0L)(
       Seq((1L, 10L), (2L, 11L)).toDF("test_id", "train_id"))
     IndexErasure.purgeBatches(spark, root, Seq("test_id", "train_id"),
@@ -307,7 +307,7 @@ class IndexErasureSpec extends AnyFunSuite with SparkTestSession {
   test("purgeBatches: a purge rejected for reserved columns leaves no tombstone log") {
     import spark.implicits._
     import graft.pipeline.{ArtifactStore, IndexErasure}
-    val root = s"/tmp/graft-test-erasure/${java.util.UUID.randomUUID().toString.take(8)}/hits"
+    val root = tempDir("graft_erasure").resolve("hits").toString
     // data column collides with the purge machinery's working name
     ArtifactStore.appendBatchIfAbsent(spark, root, 0L)(
       Seq((1L, 10L)).toDF("test_id", "__hit"))

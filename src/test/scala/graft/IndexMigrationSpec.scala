@@ -14,7 +14,7 @@ class IndexMigrationSpec extends AnyFunSuite with SparkTestSession {
   import graft.pipeline.{IndexErasure, IndexMigration}
 
   private def freshRoot(): String =
-    s"/tmp/graft-test-migration/${java.util.UUID.randomUUID().toString.take(8)}/idx"
+    tempDir("graft_migration").resolve("idx").toString
 
   /** Deterministic 8-dim integer-valued corpus: 4 well-separated clusters
     * (vec_id % 4) at centers scaled by 1000, plus small per-id jitter.

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class JanitorSpec extends AnyFunSuite with SparkTestSession {
   import graft.pipeline.Janitor
 
-  private def freshBase(): java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(
-      s"/tmp/graft-test-janitor/${java.util.UUID.randomUUID().toString.take(8)}")
-    java.nio.file.Files.createDirectories(p)
-    p
-  }
+  private def freshBase(): java.nio.file.Path = tempDir("graft_janitor")
 
   private def mkDir(base: java.nio.file.Path, name: String,
                     withSuccess: Boolean = false, withData: Boolean = true): Unit = {

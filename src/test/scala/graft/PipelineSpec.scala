@@ -90,12 +90,13 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
   test("StateStore: empty read, write, staged rewrite from own read") {
     val dir   = tempDir("graft_state").resolve("state").toString
     val store = new StateStore(dir)
-    assert(store.read(spark).count() === 0)
-    store.write(Seq(("p1", 10L)).toDF("path", "last_edit_time"))
+    assert(store.read(spark).count() === 0 && store.load(spark).isEmpty)
+    store.save(spark, Seq(("p1", 10L, false)))
     assert(store.read(spark).head.getLong(1) === 10L)
     // rewrite derived from its own read (staging swap must handle this)
-    store.write(store.read(spark).withColumn("last_edit_time", col("last_edit_time") + 1))
+    store.save(spark, store.load(spark).map { case (p, (t, l)) => (p, t + 1, l) })
     assert(store.read(spark).head.getLong(1) === 11L)
+    assert(store.load(spark) === Map("p1" -> ((11L, false))))
   }
 
   test("VectorIndex: dimension validation + keyed upsert") {
@@ -105,9 +106,10 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
       ("a", Seq(1.0, 0.0), Map.empty[String, String], 1L),
       ("bad", Seq(1.0, 0.0, 3.0), Map.empty[String, String], 1L),
     ).toDF("id", "embedding", "metadata", "version")
-    idx.upsert(v1)
+    idx.upsert(v1, Set("a", "bad"))
     assert(idx.read(spark).count() === 1) // 'bad' rejected by dim check
-    idx.upsert(Seq(("a", Seq(0.0, 1.0), Map.empty[String, String], 2L)).toDF("id", "embedding", "metadata", "version"))
+    idx.upsert(Seq(("a", Seq(0.0, 1.0), Map.empty[String, String], 2L)).toDF("id", "embedding", "metadata", "version"),
+      Set("a"))
     val row = idx.read(spark).filter($"id" === "a").head
     assert(row.getSeq[Double](1) === Seq(0.0, 1.0))
     assert(idx.read(spark).count() === 1)
@@ -165,19 +167,19 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     val dir = tempDir("graft_index_e").resolve("index").toString
     val rows = Seq(("a", Seq(1.0, 0.0), Map.empty[String, String], 1L))
       .toDF("id", "embedding", "metadata", "version")
-    new VectorIndex(dir, 2, Some("embedder-v1")).upsert(rows)
+    new VectorIndex(dir, 2, Some("embedder-v1")).upsert(rows, Set("a"))
     // same embedder: fine
-    new VectorIndex(dir, 2, Some("embedder-v1")).upsert(rows)
+    new VectorIndex(dir, 2, Some("embedder-v1")).upsert(rows, Set("a"))
     // different embedder: mixed metric spaces -> hard refusal
     val e = intercept[IllegalArgumentException] {
-      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows)
+      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows, Set("a"))
     }
     assert(e.getMessage.contains("embedder"))
     // unstamped (legacy) writers are not blocked — but must CARRY the
     // existing marker through the swap rather than strip the protection
-    new VectorIndex(dir, 2).upsert(rows)
+    new VectorIndex(dir, 2).upsert(rows, Set("a"))
     val e2 = intercept[IllegalArgumentException] {
-      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows)
+      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows, Set("a"))
     }
     assert(e2.getMessage.contains("embedder-v1"))
   }
@@ -188,7 +190,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
         ("b", Seq(0.0, 1.0), Map.empty[String, String], 1L))
       .toDF("id", "embedding", "metadata", "version")
     val v1 = new VectorIndex(dir, 2, Some("embedder-v1"))
-    v1.upsert(rows)
+    v1.upsert(rows, Set("a", "b"))
     val e = intercept[IllegalArgumentException] {
       new VectorIndex(dir, 2, Some("embedder-v2")).delete(Seq("a").toDF("id"))
     }
@@ -199,7 +201,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(marker === "embedder-v1")
     assert(v1.read(spark).select("id").as[String].collect().sorted.toSeq === Seq("a", "b"))
     intercept[IllegalArgumentException] {
-      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows)
+      new VectorIndex(dir, 2, Some("embedder-v2")).upsert(rows, Set("a"))
     }
   }
 
@@ -340,37 +342,107 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     val base = rows(("a", Seq(1.0, 0.0), 1L), ("b", Seq(0.0, 1.0), 1L), ("c", Seq(1.0, 1.0), 1L))
     val vecs = rows(("a", Seq(0.0, 1.0), 2L), ("d", Seq(1.0, 0.0), 2L),
       ("bad", Seq(1.0, 0.0, 0.0), 2L), ("e", Seq(0.5, 0.5), 2L))
-    val dels = Seq("b", "e", "absent").toDF("id") // "e" is in both sets
+    val ids  = Set("a", "d", "bad", "e")
+    val dels = Set("b", "e", "absent") // "e" is in both sets
     def fresh(): (String, VectorIndex) = {
       val dir = tempDir("graft_upd").resolve("index").toString
       val idx = new VectorIndex(dir, 2, Some("embedder-v1"))
-      idx.upsert(base)
+      idx.upsert(base, Set("a", "b", "c"))
       (dir, idx)
     }
     def content(idx: VectorIndex) = idx.read(spark).collect()
       .map(r => (r.getString(0), r.getSeq[Double](1), r.getLong(3))).sortBy(_._1).toSeq
 
     val (oneDir, one) = fresh()
-    one.upsert(vecs, Some(dels))
+    one.upsert(vecs, ids, dels)
     val (_, two) = fresh()
-    two.upsert(vecs)
-    two.delete(dels)
+    two.upsert(vecs, ids)
+    two.delete(dels.toSeq.toDF("id"))
     assert(content(one) === content(two))
     // the id in both sets is erased; the wrong-dimension row is rejected
     assert(content(one).map(_._1) === Seq("a", "c", "d"))
     // no deletes: exactly the rows a plain upsert always wrote
     val (_, three) = fresh()
-    three.upsert(vecs, None)
+    three.upsert(vecs, ids)
     assert(content(three) === Seq(("a", Seq(0.0, 1.0), 2L), ("b", Seq(0.0, 1.0), 1L),
       ("c", Seq(1.0, 1.0), 1L), ("d", Seq(1.0, 0.0), 2L), ("e", Seq(0.5, 0.5), 2L)))
+    // keyed, not versioned: a lower version replaces a stored higher one,
+    // and a row whose id is not a key is not written
+    three.upsert(rows(("a", Seq(1.0, 1.0), 0L), ("g", Seq(1.0, 1.0), 0L)), Set("a"))
+    assert(content(three).take(2) === Seq(("a", Seq(1.0, 1.0), 0L), ("b", Seq(0.0, 1.0), 1L)))
+    assert(content(three).map(_._1) === Seq("a", "b", "c", "d", "e"))
     // the embedder marker survives the combined rewrite, also from an
     // unstamped writer, and still refuses another embedder
-    new VectorIndex(oneDir, 2).upsert(rows(("f", Seq(1.0, 0.0), 3L)), Some(Seq("a").toDF("id")))
+    new VectorIndex(oneDir, 2).upsert(rows(("f", Seq(1.0, 0.0), 3L)), Set("f"), Set("a"))
     val e = intercept[IllegalArgumentException] {
-      new VectorIndex(oneDir, 2, Some("embedder-v2")).upsert(vecs, Some(dels))
+      new VectorIndex(oneDir, 2, Some("embedder-v2")).upsert(vecs, ids, dels)
     }
     assert(e.getMessage.contains("embedder-v1"))
     assert(content(one).map(_._1) === Seq("c", "d", "f"))
+  }
+
+  test("Sync: a vector left by a crashed cycle is replaced by the next edit, whatever its version") {
+    val root  = mkCorpus()
+    val names = Seq("a.md", "sub/b.md", "sub/nested/c.md")
+    names.foreach(f => touch(root.resolve(f), 100L))
+    val state = tempDir("graft_cvs").resolve("state").toString
+    val index = tempDir("graft_cvi").resolve("index").toString
+    val embedder = HashingEmbedder(8)
+    val sync  = new Sync(root.toString, state, index, embedder)
+    assert(sync.run(spark).indexed === 3)
+    // a cycle indexed a.md's content at mtime 300 and crashed before its
+    // state write: state still says 100
+    val id  = "file:" + root.resolve("a.md").toAbsolutePath.normalize.toString
+    val idx = new VectorIndex(index, 8, Some(embedder.id))
+    def vector(text: String) = Seq(text).toDF("text")
+      .select(embedder.embed(col("text"))).head.getSeq[Double](0)
+    idx.upsert(Seq((id, vector("content of the crashed cycle"), Map.empty[String, String], 300L))
+      .toDF("id", "embedding", "metadata", "version"), Set(id))
+    // the file is then rewritten, with an mtime below the stored version
+    Files.writeString(root.resolve("a.md"), "the content that exists now")
+    touch(root.resolve("a.md"), 200L)
+    val r = sync.run(spark)
+    assert((r.changed, r.indexed) === ((1, 1)))
+    val row = idx.read(spark).filter($"id" === id).select("embedding", "version").head
+    assert((row.getSeq[Double](0), row.getLong(1)) === ((vector("the content that exists now"), 200L)))
+    assertMirrors(root, state, index, names, Set.empty)
+  }
+
+  test("StateStore.load reads what Spark wrote; save writes what Spark reads") {
+    val dir   = tempDir("graft_stc")
+    val store = new StateStore(dir.resolve("state").toString)
+    def sparkMap(s: StateStore) = s.read(spark)
+      .select(col("path"), col("last_edit_time"), coalesce(col("too_long"), lit(false)))
+      .as[(String, Long, Boolean)].collect().map { case (p, t, l) => p -> ((t, l)) }.toMap
+    def dataFiles(d: String) = new java.io.File(d).listFiles().map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+    // a missing state directory is empty either way
+    assert(store.load(spark).isEmpty && sparkMap(store).isEmpty)
+
+    val rows = (0 until 40).map(i => (s"file:/c/d$i.md", 1000L + i, i % 3 == 0))
+    // as Spark's writer left it: several part files, `_SUCCESS` and `.crc`
+    // files, a null flag, and the reference's two columns only
+    val three = dir.resolve("three").toString
+    rows.map { case (p, t, l) => (p, t, Option.unless(p.endsWith("9.md"))(l)) }
+      .toDF("path", "last_edit_time", "too_long").repartition(3).write.parquet(three)
+    val two = dir.resolve("two").toString
+    rows.map { case (p, t, _) => (p, t) }.toDF("path", "last_edit_time").repartition(3).write.parquet(two)
+    for (d <- Seq(three, two)) {
+      val names = new java.io.File(d).list().toSeq
+      assert(dataFiles(d).size === 3 && names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+      val s = new StateStore(d)
+      assert(s.load(spark) === sparkMap(s), d)
+    }
+    assert(new StateStore(three).load(spark)("file:/c/d9.md") === ((1009L, false)))
+    assert(new StateStore(two).load(spark).values.forall(!_._2))
+
+    // save: read back the same through Spark, as one data file
+    store.save(spark, rows)
+    val expected = rows.map { case (p, t, l) => p -> ((t, l)) }.toMap
+    assert(sparkMap(store) === expected && store.load(spark) === expected)
+    assert(dataFiles(dir.resolve("state").toString).size === 1)
+    store.save(spark, Nil)
+    assert(store.load(spark).isEmpty && store.read(spark).count() === 0)
   }
 
   /** Index ids with versions, and state rows with flags, describe exactly
@@ -430,6 +502,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
 
   test("Sync cycle: one index rewrite, and only changed files' content is read") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -445,6 +519,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     val index = tempDir("graft_shi").resolve("index").toString
     val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
     assert(sync.run(spark).indexed === 20)
+    def parquetFiles(dir: String) = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(parquetFiles(index) === 1, "a small first write is one file")
 
     val edited = root.resolve("d03.md")
     Files.writeString(edited, "an edited document")
@@ -452,13 +528,21 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     Files.delete(root.resolve("d07.md"))
 
     // Counted from the executed plans: writes whose output is the index's
-    // staging dir, and the binaryFile scans that read `content` (each once,
-    // also when a cached frame runs it) with the bytes of the files they
-    // selected. Stage inputMetrics cannot tell these bytes apart: a stage
-    // reading a cached frame counts its in-memory bytes as input, and the
-    // merge's stage also reads the index parquet.
+    // staging dir, with the operators of their plans, and the binaryFile
+    // scans that read `content` (each once, also when a cached frame runs
+    // it) with the bytes of the files they selected. Stage inputMetrics
+    // cannot tell these bytes apart: a stage reading a cached frame counts
+    // its in-memory bytes as input, and the write's stage also reads the
+    // index parquet.
     val staging = new org.apache.hadoop.fs.Path(index + ".staging").toUri.getPath
     val writes  = new java.util.concurrent.atomic.AtomicInteger
+    val writeOps = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    def operators(plan: SparkPlan): Unit = plan.foreach {
+      case a: AdaptiveSparkPlanExec => writeOps.add(a); operators(a.executedPlan)
+      case q: QueryStageExec        => writeOps.add(q); operators(q.plan)
+      case m: InMemoryTableScanExec => writeOps.add(m); operators(m.relation.cachedPlan)
+      case o                        => writeOps.add(o)
+    }
     val reads   = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
     def contentScans(plan: SparkPlan): Unit = plan.foreach {
@@ -476,6 +560,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
         qe.analyzed.foreach {
           case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toUri.getPath == staging =>
             writes.incrementAndGet()
+            operators(qe.executedPlan)
           case _ =>
         }
         contentScans(qe.executedPlan)
@@ -503,21 +588,31 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
         spark.sparkContext.removeSparkListener(jobListener)
       }
     }
-    val (r, cycleRuns, _) = counted(sync.run(spark))
+    val (r, cycleRuns, cycleJobs) = counted(sync.run(spark))
     assert(r.changed === 1 && r.indexed === 1 && r.deleted === 1)
     assert(writes.get === 1, "one staged index rewrite per cycle")
+    // the rewrite is one narrow stage: keyed by the cycle's own delta, it
+    // needs no shuffle, no broadcast and no window
     import scala.jdk.CollectionConverters._
+    val wide = writeOps.asScala.filter {
+      case _: Exchange | _: WindowExec | _: QueryStageExec => true
+      case _                                               => false
+    }
+    assert(writeOps.asScala.exists(_.nodeName == "Execute InsertIntoHadoopFsRelationCommand") && wide.isEmpty,
+      wide.map(_.nodeName).mkString(", "))
     val bytesRead = reads.asScala.toSeq.map(_.metrics("filesSize").value).sum
     assert(reads.size === 1 && bytesRead === Files.size(edited),
       s"${reads.size} content scans read $bytesRead bytes for a ${Files.size(edited)}-byte delta")
-    // state read, content read, index write, state write
-    assert(cycleRuns <= 4, s"$cycleRuns SQL executions for a one-file cycle")
-    // the state read alone, one job: no join, no cached frame
+    // the guard's collect and the index write; state is read and written
+    // on the driver
+    assert(cycleRuns <= 2 && cycleJobs <= 2,
+      s"$cycleRuns SQL executions and $cycleJobs jobs for a one-file cycle")
+    // no Spark work at all: the listing and the state load run on the driver
     val (same, sameRuns, sameJobs) = counted(sync.run(spark))
-    assert(same.changed === 0 && sameRuns === 1 && sameJobs === 1,
+    assert(same.changed === 0 && sameRuns === 0 && sameJobs === 0,
       s"$sameRuns SQL executions and $sameJobs jobs for an unchanged cycle")
-    assert(new java.io.File(state).listFiles().count(_.getName.endsWith(".parquet")) === 1,
-      "the state write must not split state into more files")
+    assert(parquetFiles(state) === 1, "the state write must not split state into more files")
+    assert(parquetFiles(index) === 1, "the index write must keep the index's file count")
   }
 
   /** Every file under `dir`, by relative name, with its bytes. */

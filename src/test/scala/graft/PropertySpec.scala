@@ -530,7 +530,7 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
       nDelta <- Gen.chooseNum(0, 8)
     } yield (n, nCells, tombFrac, nDelta)
     sample(caseGen, 6, 23L).zipWithIndex.foreach { case ((n, nCells, tombFrac, nDelta), ci) =>
-      val root = s"/tmp/graft-test-erasure/prop$ci/idx"
+      val root = tempDir("graft_prop").resolve("idx").toString
       val rows = (0L until n.toLong).map(i => (i, i % nCells, s"p$i"))
       IndexErasure.ensurePartitioned(spark, root, "cell")(
         rows.toDF("id", "cell", "payload"))
@@ -616,7 +616,7 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     } yield (n, nCells, nDelta, tombFrac, ops)
     sample(caseGen, 5, 61L).zipWithIndex.foreach {
       case ((n, nCells, nDelta, tombFrac, ops0), ci) =>
-        val root = s"/tmp/graft-test-erasure/propew-${java.util.UUID.randomUUID().toString.take(8)}/idx"
+        val root = tempDir("graft_propew").resolve("idx").toString
         val base = (0L until n.toLong).map(i => (i, i % nCells, s"p$i"))
         // delta ids extend the base range CONTIGUOUSLY so tombstones drawn
         // from the whole range overlap both base and delta
@@ -666,7 +666,7 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
       tombFrac <- Gen.chooseNum(0, 6)
     } yield (sizes, pool, tombFrac)
     sample(caseGen, 5, 91L).zipWithIndex.foreach { case ((sizes, pool, tombFrac), ci) =>
-      val root = s"/tmp/graft-test-erasure/proppb-${java.util.UUID.randomUUID().toString.take(8)}/hits"
+      val root = tempDir("graft_proppb").resolve("hits").toString
       // deterministic pseudo-random refs from a small id pool so tombstones
       // genuinely intersect both columns
       val rows = sizes.zipWithIndex.map { case (sz, b) =>

@@ -468,7 +468,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     import graft.pipeline.{ArtifactStore, IndexErasure}
     // two identical hits artifacts: one purged by the stream, one one-shot
     def seed(): String = {
-      val root = s"/tmp/graft-test-erasure/${java.util.UUID.randomUUID().toString.take(8)}/hits"
+      val root = tempDir("graft_erasure").resolve("hits").toString
       ArtifactStore.appendBatchIfAbsent(spark, root, 0L)(
         Seq((1L, 10L), (2L, 11L), (3L, 10L)).toDF("test_id", "train_id"))
       ArtifactStore.appendBatchIfAbsent(spark, root, 1L)(
