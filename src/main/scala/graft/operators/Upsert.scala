@@ -15,8 +15,8 @@ import org.apache.spark.sql.DataFrame
   *
   * The registered queries use it (q29, q262). The vector index does not:
   * its sync knows the keys it touches on the driver, so
-  * [[graft.pipeline.VectorIndex.upsert]] replaces by those keys in one
-  * narrow stage, with no shuffle and no version precedence.
+  * [[graft.pipeline.VectorIndex.upsert]] replaces by those keys on the
+  * driver, with no shuffle and no version precedence.
   */
 object Upsert {
 

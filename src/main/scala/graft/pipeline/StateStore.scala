@@ -1,14 +1,10 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** File-state cache (SURVEY.md §2.1 S4/S7): the Spark analog of the
   * reference's SQLite table `files(path TEXT PRIMARY KEY, last_edit_time
@@ -17,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
   *
   * State is tiny relative to the corpus (one row per file), so [[Sync]]
   * handles it on the driver: [[load]] reads the whole table into a map and
-  * [[save]] writes the next snapshot as one parquet file, both through the
-  * Parquet API, with no Spark job. The file is staged and swapped in
-  * ([[StagedSwap]]), so a crash never leaves a half-written state. [[read]]
-  * gives the same table as a DataFrame, for queries and checks.
+  * [[save]] writes the next snapshot as one parquet file, both through
+  * Spark's Parquet row support ([[DriverParquet]]), with no Spark job. The
+  * file is staged and swapped in ([[StagedSwap]]), so a crash never leaves
+  * a half-written state. [[read]] gives the same table as a DataFrame, for
+  * queries and checks.
   */
 final class StateStore(path: String) {
 
@@ -37,12 +34,6 @@ final class StateStore(path: String) {
     StructField("last_edit_time", LongType, nullable = false),
     StructField("too_long", BooleanType, nullable = true)))
 
-  private val parquetSchema: MessageType = Types.buildMessage()
-    .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("path")
-    .required(PrimitiveTypeName.INT64).named("last_edit_time")
-    .optional(PrimitiveTypeName.BOOLEAN).named("too_long")
-    .named("spark_schema")
-
   def read(spark: SparkSession): DataFrame = {
     val p  = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -57,23 +48,10 @@ final class StateStore(path: String) {
     * flag, reads as not over-long.
     */
   def load(spark: SparkSession): Map[String, (Long, Boolean)] = {
-    val p    = new Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs   = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Map.empty
     val rows = Map.newBuilder[String, (Long, Boolean)]
-    // the data files Spark's file index reads: no hidden name, and no
-    // leading `_` (it keeps `_metadata` names for Parquet, but never reads them)
-    def data(name: String) = !GraftSqlBridge.hiddenPathName(name) && !name.startsWith("_")
-    fs.listStatus(p).filter(s => s.isFile && data(s.getPath.getName))
-      .foreach { s =>
-        val reader = ParquetReader.builder(new GroupReadSupport(), s.getPath).withConf(conf).build()
-        try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
-          val flagged = g.getType.containsField("too_long") && g.getFieldRepetitionCount("too_long") > 0 &&
-            g.getBoolean("too_long", 0)
-          rows += g.getString("path", 0) -> ((g.getLong("last_edit_time", 0), flagged))
-        } finally reader.close()
-      }
+    DriverParquet.foreachRow(spark, new Path(path), schema) { r =>
+      rows += r.getUTF8String(0).toString -> ((r.getLong(1), !r.isNullAt(2) && r.getBoolean(2)))
+    }
     rows.result()
   }
 
@@ -81,18 +59,13 @@ final class StateStore(path: String) {
     * written on the driver as one parquet file and swapped in.
     */
   def save(spark: SparkSession, rows: Iterable[(String, Long, Boolean)]): Unit = {
-    val p    = new Path(path)
-    val tmp  = new Path(path + ".staging")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs   = p.getFileSystem(conf)
+    val p   = new Path(path)
+    val tmp = new Path(path + ".staging")
+    val fs  = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    val writer = ExampleParquetWriter.builder(new Path(tmp, "part-00000.snappy.parquet"))
-      .withConf(conf).withType(parquetSchema).withCompressionCodec(CompressionCodecName.SNAPPY).build()
-    val groups = new SimpleGroupFactory(parquetSchema)
-    try rows.foreach { case (file, mtime, tooLong) =>
-      writer.write(groups.newGroup().append("path", file).append("last_edit_time", mtime)
-        .append("too_long", tooLong))
-    } finally writer.close()
+    DriverParquet.write(spark, tmp, schema) { put =>
+      rows.foreach { case (file, mtime, tooLong) => put(InternalRow(UTF8String.fromString(file), mtime, tooLong)) }
+    }
     StagedSwap.swap(fs, tmp, p, new Path(path + ".old"))
   }
 }

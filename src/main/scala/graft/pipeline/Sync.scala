@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 
@@ -24,39 +25,56 @@ final class Sync(
     pathRegex: String = ".*\\.md$",
     maxTokens: Int = 8191) {
 
+  /** A cycle's counts, and where its time went: seconds spent listing,
+    * loading state, in the guard's Spark jobs (which the new vectors are
+    * written from as they arrive), in the rest of the index write and
+    * saving state (0 for a phase the cycle skipped), and the rows the index
+    * write wrote.
+    */
   case class Report(scanned: Long, changed: Long, skippedTooLong: Long,
-                    indexed: Long, deleted: Long, dryRun: Boolean)
+                    indexed: Long, deleted: Long, dryRun: Boolean,
+                    listS: Double = 0, loadS: Double = 0, guardS: Double = 0,
+                    indexS: Double = 0, saveS: Double = 0, indexRows: Long = 0)
 
   /** One cycle. Its Spark work follows the delta, not the corpus: the
     * corpus is listed once, on the driver, and classified there against
     * state loaded on the driver; only changed files' content is read, from
-    * their listed statuses, and the guard's verdicts come back in one
-    * action; the index is rewritten at most once, as one narrow stage keyed
-    * by the changed and erased paths; state is saved on the driver from
-    * the listing snapshot. An unchanged cycle runs no Spark job, a cycle
-    * with edits two (the guard's collect and the index write).
+    * their listed statuses, in one Spark job that brings back each file's
+    * guard verdict and, under the guard, its vector; the driver streams
+    * those vectors into the one rewrite of the index, keyed by the changed
+    * and erased paths ([[VectorIndex.rewrite]]), and saves state from the
+    * listing snapshot. An unchanged cycle runs no Spark job, a cycle with
+    * changed files one.
     *
     * Size limit: the driver holds one `FileStatus` per listed file, as
-    * Spark's own file index did, and one state row per file; the keys of
-    * the index write (every changed and every erased path) ride in its
-    * plan as literal sets, so a cycle that touches the whole corpus plans
-    * one string literal per file. The walk is sequential: it trades
-    * Spark's parallel listing, which starts a job once a directory has
-    * more than 32 subdirectories, for no job at all. On a remote store
-    * with thousands of directories the parallel listing can be faster.
+    * Spark's own file index did, and one state row per file. Vectors are
+    * not collected: they are written as each task's rows arrive, so the
+    * driver holds a few tasks' rows at a time. A job's results count
+    * against `spark.driver.maxResultSize`, so a delta whose vectors pass
+    * half of it runs as several jobs ([[Sync.filesPerJob]]): at the 1 GiB
+    * default, one job per about 42 000 changed files at dim 1536. The index is
+    * written by one thread on the driver, as the reference's single
+    * process writes it.
+    * The walk is sequential: it trades Spark's parallel listing, which
+    * starts a job once a directory has more than 32 subdirectories, for no
+    * job at all. On a remote store with thousands of directories the
+    * parallel listing can be faster.
     * Measured at `local[4]` on a 4-vCPU Xeon VM with 20 000 files in 200
-    * directories (a dim-64 embedder, a fresh JVM per run, heavy and
-    * varying steal): a cold sync took 27.2–41.1 s, an all-files-touched
-    * cycle 7.0–10.9 s, an unchanged cycle 0.4–0.9 s and a one-file cycle
-    * 1.4–2.4 s, against 25.6–32.9 s, 14.3–18.4 s, 1.1–1.3 s and 1.8–2.7 s
-    * when the index write merged versions through a shuffle and state went
-    * through Spark jobs.
+    * directories (a dim-64 embedder; one JVM per sequence of cold,
+    * unchanged, one-file and all-touched cycles, three runs): a cold sync
+    * took 17.7–23.2 s, an unchanged cycle 0.5–0.8 s, a one-file cycle
+    * 1.2–1.3 s and an all-touched cycle 4.3–6.3 s, against 28.9–36.9 s,
+    * 0.5–0.7 s, 1.7–2.0 s and 9.1–10.1 s in the same window when the index
+    * write was a Spark stage and the guarded frame was cached. An
+    * all-touched cycle as the only one of a fresh JVM, as a cron job runs
+    * it, took 22.7–24.6 s with session start.
     */
   def run(spark: SparkSession, dryRun: Boolean = false): Report = {
     import graft.functions.TextFunctions
-    import spark.implicits._
     val state = new StateStore(statePath)
     val index = new VectorIndex(indexPath, embedder.dim, Some(embedder.id))
+    var mark  = System.nanoTime()
+    def lap(): Double = { val t = System.nanoTime(); try (t - mark) / 1e9 finally mark = t }
     // (status, path, mtime) snapshotted ONCE: the state write below must
     // record the mtimes this run actually saw — re-listing at write time
     // could record a newer mtime for content embedded from the earlier
@@ -66,8 +84,10 @@ final class Sync(
     // empty listing would tombstone every indexed file.
     val listed = FileScan.list(spark, rootDir, pathRegex)
       .map(f => (f, f.getPath.toString, Math.floorDiv(f.getModificationTime, 1000L)))
+    val listS = lap()
     // state, read once on the driver: path -> (mtime, too_long)
     val known = state.load(spark)
+    val loadS = lap()
     // the delta (main.py:143-147): strictly newer than the cached mtime,
     // missing ⇒ 0. Gone paths are the deletion propagation the reference
     // never does (its walk yields only existing files, main.py:62-68, so a
@@ -77,67 +97,89 @@ final class Sync(
     val gone    = known.keySet -- listed.map(_._2)
     val scanned = listed.size.toLong
     if (changed.isEmpty && gone.isEmpty) // empty-delta early exit (main.py:149-151)
-      return Report(scanned, 0, 0, 0, 0, dryRun)
+      return Report(scanned, 0, 0, 0, 0, dryRun, listS, loadS)
 
-    // content of the changed files only (the reference reads a file after
-    // its mtime check, main.py:174), read from their listed statuses. It
-    // is cached because the index write embeds the same rows; it is
-    // released however the run ends: a throw (e.g. the index refusing a
-    // different embedder) must not leave it cached for the session.
-    val guarded = FileScan.read(spark, changed.map(_._1))
-      .withColumn("too_long", TextFunctions.tokenCount(col("text")) >= maxTokens).cache()
-    try {
-      val verdicts =
-        if (changed.isEmpty) Map.empty[String, Boolean]
-        else guarded.select("path", "too_long").as[(String, Boolean)].collect().toMap
+    // path -> too_long: the guard's verdict for each changed file
+    var guardS   = 0.0
+    val verdicts = scala.collection.mutable.Map.empty[String, Boolean]
+    // The guard: the content of the changed files only (the reference
+    // reads a file after its mtime check, main.py:174), read from their
+    // listed statuses, with each file's token count and, unless this is a
+    // dry run, the vector of each file under the guard. A row is (id,
+    // embedding, metadata, version, too_long), the index's columns first,
+    // and reaches `put` as its task finishes.
+    def guard(embed: Boolean)(put: InternalRow => Unit): Unit = {
+      val t0 = System.nanoTime()
+      changed.grouped(Sync.filesPerJob(spark, embedder.dim)).foreach { batch =>
+        val read = FileScan.read(spark, batch.map(_._1))
+          .withColumn("too_long", TextFunctions.tokenCount(col("text")) >= maxTokens)
+        DriverParquet.stream(read.select(col("path"),
+          if (embed) when(!col("too_long"), embedder.embed(col("text"))) else lit(null).cast("array<double>"),
+          map().cast("map<string,string>"), // reference metadata is always {}
+          col("mtime"), col("too_long"))) { r =>
+          verdicts(r.getUTF8String(0).toString) = r.getBoolean(4)
+          put(r)
+        }
+      }
+      guardS = (System.nanoTime() - t0) / 1e9
       // a changed file whose content the read missed would otherwise have
       // its new mtime recorded below without being indexed
       if (changed.exists(c => !verdicts.contains(c._2)))
         sys.error(s"Sync: read ${verdicts.size} of ${changed.size} changed files under $rootDir")
-      val tooLong = verdicts.count(_._2).toLong
-      val okCount = changed.size - tooLong
-      // a dry run REPORTS pending deletions like it reports pending
-      // changes — returning deleted=0 here would make `--dry-run` print
-      // "no changes" while the next real run erases vectors
-      if (dryRun) return Report(scanned, changed.size, tooLong, 0, gone.size, dryRun)
+    }
+    def tooLong = verdicts.count(_._2).toLong
+    // a dry run REPORTS pending deletions like it reports pending
+    // changes — returning deleted=0 here would make `--dry-run` print
+    // "no changes" while the next real run erases vectors
+    if (dryRun) {
+      guard(embed = false)(_ => ())
+      return Report(scanned, changed.size, tooLong, 0, gone.size, dryRun, listS, loadS, guardS)
+    }
 
-      // INDEX first: upserts and erasures in one staged rewrite keyed by
-      // the changed and the erased paths, skipped when it would rewrite
-      // identical content. A changed path's row replaces the stored one
-      // whatever its version: a vector that a crashed cycle wrote from
-      // later content must not outlive that content. Erased are vanished
-      // files AND files that NEWLY crossed the token guard: "filtered, not
-      // crashed" applies to the INDEX too — an edit that pushes an indexed
-      // doc over the guard supersedes its old content, so the stale
-      // pre-edit vector must not stay retrievable. NEWLY is load-bearing
-      // (ADVICE r18): a path already recorded too_long holds no vector, and
-      // since too-long paths are cached with their mtime (flagged, below)
-      // they no longer resurface in the delta at all, so a permanently
-      // over-long doc costs nothing after its first sync.
-      val newlyTooLong = verdicts.collect { case (p, true) if known.get(p).exists(!_._2) => p }
-      val erase = gone ++ newlyTooLong
-      if (okCount > 0 || erase.nonEmpty) {
-        val vectors = guarded.filter(!col("too_long")).select(
-          col("path").as("id"),
-          embedder.embed(col("text")).as("embedding"),
-          map().cast("map<string,string>").as("metadata"), // reference metadata is always {}
-          col("mtime").as("version"))
-        index.upsert(vectors, verdicts.keySet, erase)
-      }
-      // … then STATE, from the snapshot. Too-long documents are recorded
-      // WITH their mtime and a too_long flag (not excluded): the flag is
-      // what lets the next run's delta skip them and what distinguishes
-      // "newly crossed the guard" (erase the stale vector) from "known
-      // over-long" (nothing to erase). Changed paths take the guard's
-      // verdict, unchanged paths carry their previous flag; gone paths
-      // drop out. The index-before-state order keeps the crash contract: a
-      // crash between the two re-derives the same delta AND the same
-      // tombstones next run — the upsert and its erasures are idempotent
-      // (at-least-once, the main.py:185-188 commit-order contract extended
-      // to erasure).
-      state.save(spark,
-        listed.map { case (_, p, m) => (p, m, verdicts.getOrElse(p, known.get(p).exists(_._2))) })
-      Report(scanned, changed.size, tooLong, okCount, gone.size, dryRun)
-    } finally guarded.unpersist()
+    // INDEX first: upserts and erasures in one staged rewrite keyed by the
+    // changed and the erased paths, the guard's vectors written as they
+    // arrive; it writes nothing when it would change nothing. A changed
+    // path's row replaces the stored one whatever its version: a vector
+    // that a crashed cycle wrote from later content must not outlive that
+    // content. Erased are vanished files AND files that NEWLY crossed the
+    // token guard: "filtered, not crashed" applies to the INDEX too — an
+    // edit that pushes an indexed doc over the guard supersedes its old
+    // content, so the stale pre-edit vector must not stay retrievable. Such
+    // a file is a changed path, so its stored row is dropped like any
+    // changed path's, and with no vector it adds none back. NEWLY is
+    // load-bearing (ADVICE r18): a path already recorded too_long holds no
+    // vector, and since too-long paths are cached with their mtime
+    // (flagged, below) they no longer resurface in the delta at all, so a
+    // permanently over-long doc costs nothing after its first sync.
+    val indexRows = index.rewrite(spark, changed.map(_._2).toSet, gone)(guard(embed = true))
+    val indexS = lap() - guardS
+    // … then STATE, from the snapshot. Too-long documents are recorded
+    // WITH their mtime and a too_long flag (not excluded): the flag is
+    // what lets the next run's delta skip them and what distinguishes
+    // "newly crossed the guard" (erase the stale vector) from "known
+    // over-long" (nothing to erase). Changed paths take the guard's
+    // verdict, unchanged paths carry their previous flag; gone paths
+    // drop out. The index-before-state order keeps the crash contract: a
+    // crash between the two re-derives the same delta AND the same
+    // tombstones next run — the upsert and its erasures are idempotent
+    // (at-least-once, the main.py:185-188 commit-order contract extended
+    // to erasure).
+    state.save(spark,
+      listed.map { case (_, p, m) => (p, m, verdicts.getOrElse(p, known.get(p).exists(_._2))) })
+    Report(scanned, changed.size, tooLong, changed.size - tooLong, gone.size, dryRun,
+      listS, loadS, guardS, indexS, lap(), indexRows)
+  }
+}
+
+object Sync {
+
+  /** Changed files per guard job. A job's results may not pass
+    * `spark.driver.maxResultSize` (≤ 0: no limit), and a changed file
+    * brings back one row of its vector and its path, taken here as
+    * `dim` × 8 + 512 bytes; half the limit leaves room for serialization.
+    */
+  private[graft] def filesPerJob(spark: SparkSession, dim: Int): Int = {
+    val limit = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (limit <= 0) Int.MaxValue else math.max(1L, math.min(Int.MaxValue, limit / 2 / (dim * 8L + 512))).toInt
   }
 }

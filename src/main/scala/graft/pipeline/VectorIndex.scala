@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Vector index table (SURVEY.md §2.1 S5/S6): the Spark analog of the
   * reference's Pinecone index — create-if-absent DDL with a fixed dimension
@@ -16,9 +16,12 @@ import org.apache.spark.sql.functions._
   * ([[graft.operators.TopK]]), not of storage. Dimension is enforced at write
   * (validation filter), matching the index-DDL dimension contract.
   *
-  * Every write is one [[upsert]] keyed by ids the caller names ([[Sync]]
-  * holds them on the driver already): a narrow rewrite plus a staged swap,
-  * with no merge of versions — the reference's upsert replaces by id too.
+  * Every write is one keyed rewrite by ids the caller names ([[Sync]]
+  * holds them on the driver already), then a staged swap, with no merge of
+  * versions — the reference's upsert replaces by id too. The rewrite runs
+  * on the driver, as the reference's single process does: the stored rows
+  * and the new ones stream into one file, with no Spark job of its own, no
+  * output committer and no planning.
   */
 final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] = None) {
 
@@ -50,56 +53,72 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  /** The index's one write: the index without every row whose id is in
-    * `ids` or `erase`, plus the rows of `vectors` (id, embedding, metadata,
+  /** The index's write: the index without every row whose id is in `ids`
+    * or `erase`, plus the rows of `vectors` (id, embedding, metadata,
     * version) whose id is in `ids` and not in `erase` and whose embedding
     * has the index dimension. The caller names the keys it touches, so the
     * write is a keyed replace: a row of `vectors` replaces the stored row
     * of its id whatever their versions, and an id in both sets ends up
-    * erased. `vectors` holds at most one row per id.
-    *
-    * Both key sets ride in the plan as literal sets, so the rewrite is one
-    * narrow stage (a filtered index scan unioned with the new rows, no
-    * shuffle, no window), then the staged swap. Its output keeps the
-    * index's file layout: the union is coalesced to the partition count of
-    * the index scan, and a first write (no index yet, or an empty one)
-    * lets AQE size its files ([[WriteLayout.clusterBy]]). So a delta runs
-    * in as many tasks as the index scan, however large it is.
+    * erased. `vectors` holds at most one row per id. Returns the rows
+    * written. `vectors` runs as one Spark job whose rows stream to the
+    * driver ([[DriverParquet.stream]]), which rewrites the index
+    * ([[rewrite]]).
     */
-  def upsert(vectors: DataFrame, ids: Set[String], erase: Set[String] = Set.empty): Unit = {
-    val spark = vectors.sparkSession
-    val p     = new Path(path)
-    val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def upsert(vectors: DataFrame, ids: Set[String], erase: Set[String] = Set.empty): Long =
+    rewrite(vectors.sparkSession, ids, erase)(
+      DriverParquet.stream(vectors.select("id", "embedding", "metadata", "version")))
+
+  /** [[upsert]] of the rows `add` puts, rewritten on the driver with no
+    * Spark job of its own and no output committer: the stored rows stream
+    * from their files into one new file, skipping every id in `ids` or
+    * `erase`, followed by the put rows that [[upsert]] keeps. A put row
+    * holds the index's columns first; a null embedding is not written. A
+    * write that would skip no stored row and add none writes nothing. Then
+    * the embedder marker and the staged swap. Returns the rows written.
+    */
+  private[pipeline] def rewrite(spark: SparkSession, ids: Set[String], erase: Set[String])(
+      add: (InternalRow => Unit) => Unit): Long = {
+    val p  = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireSameEmbedder(fs)
-    val keep  = ids -- erase
-    val added = vectors.select("id", "embedding", "metadata", "version")
-      .filter(size(col("embedding")) === dim && col("id").isin(keep.toSeq: _*))
-    val stored = read(spark)
-    val kept   = stored.filter(!col("id").isin((ids ++ erase).toSeq: _*))
-    // the scan's partition count follows the index's files and bytes
-    val parts = stored.queryExecution.executedPlan.collectFirst {
-      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
-    }.getOrElse(0)
-    val all = kept.unionByName(added)
-    writeSwapped(spark, fs, p, if (parts > 0) all.coalesce(parts) else WriteLayout.clusterBy(all))
+    val keep = (ids -- erase).map(UTF8String.fromString)
+    val skip = (ids ++ erase).map(UTF8String.fromString)
+    val tmp  = new Path(path + ".staging")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    var touched = 0L
+    val rows = DriverParquet.write(spark, tmp, schema) { put =>
+      DriverParquet.foreachRow(spark, p, schema) { r =>
+        if (skip(r.getUTF8String(0))) touched += 1 else put(r)
+      }
+      add { r =>
+        if (keep(r.getUTF8String(0)) && !r.isNullAt(1) && r.getArray(1).numElements == dim) {
+          touched += 1; put(r)
+        }
+      }
+    }
+    if (touched == 0) { fs.delete(tmp, true); return 0 }
+    // write the new marker — or CARRY the existing one when this writer is
+    // unstamped, so a legacy caller can't silently strip the protection off
+    // a previously stamped index (the swap replaces the whole directory)
+    embedderId.orElse(storedEmbedderId(fs)).foreach { eid =>
+      val out = fs.create(markerIn(tmp), true)
+      try out.write(eid.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    StagedSwap.swap(fs, tmp, p, new Path(path + ".old"))
+    rows
   }
 
   /** Delete rows by key — the erase half the reference lacks entirely
     * (`main.py:62-68` walks only existing files, so a deleted file's vector
     * lives in Pinecone forever; SURVEY §2.7 flags the anti-join fix as the
     * intended extension, landed here). The ids are collected, then erased
-    * by [[upsert]]; idempotent — re-deleting removes nothing and rewrites
-    * identical content, which is what makes the sync crash-replay
+    * by [[rewrite]]; idempotent — re-deleting finds nothing to remove and
+    * writes nothing, which is what makes the sync crash-replay
     * (at-least-once) safe.
     */
-  def delete(ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    val p     = new Path(path)
-    val fs    = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return // nothing indexed — nothing to erase
-    val erase = ids.select("id").collect().map(_.getString(0)).toSet
-    upsert(spark.createDataFrame(java.util.List.of[Row](), schema), Set.empty, erase)
-  }
+  def delete(ids: DataFrame): Unit =
+    rewrite(ids.sparkSession, Set.empty, ids.select("id").collect().map(_.getString(0)).toSet)(_ => ())
 
   // refuse to mix embedder generations: vectors hashed by a different
   // function would cohabit one metric space and return garbage neighbors
@@ -113,20 +132,4 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
             "rebuild the index (delete it) or keep the original embedder")
       }
     }
-
-  private def writeSwapped(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                           p: Path, content: DataFrame): Unit = {
-    val tmp = new Path(path + ".staging")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    content.write.mode("overwrite").parquet(tmp.toString)
-    // write the new marker — or CARRY the existing one when this writer is
-    // unstamped, so a legacy caller can't silently strip the protection off
-    // a previously stamped index (the swap replaces the whole directory)
-    embedderId.orElse(storedEmbedderId(fs)).foreach { eid =>
-      val out = fs.create(markerIn(tmp), true)
-      try out.write(eid.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    StagedSwap.swap(fs, tmp, p, new Path(path + ".old"))
-  }
 }

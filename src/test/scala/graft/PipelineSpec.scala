@@ -500,15 +500,43 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(r4.changed === 0 && r4.deleted === 0)
   }
 
+  /** Runs `body` counting its SQL executions and Spark jobs; `onPlan`
+    * sees the query execution of each successful SQL execution. */
+  private def counted[T](onPlan: org.apache.spark.sql.execution.QueryExecution => Unit)(body: => T): (T, Int, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        executions.incrementAndGet()
+        onPlan(qe)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(jobListener)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
+      (r, executions.get, jobs.get)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
   test("Sync cycle: one index rewrite, and only changed files' content is read") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
-    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.execution.SparkPlan
     val root = tempDir("graft_shape")
     (0 until 20).foreach { i =>
       val f = root.resolve(f"d$i%02d.md")
@@ -520,99 +548,119 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
     assert(sync.run(spark).indexed === 20)
     def parquetFiles(dir: String) = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(index) === 1, "a small first write is one file")
+    assert(parquetFiles(index) === 1, "a first write is one file")
 
     val edited = root.resolve("d03.md")
     Files.writeString(edited, "an edited document")
     touch(edited, 1000100L)
     Files.delete(root.resolve("d07.md"))
 
-    // Counted from the executed plans: writes whose output is the index's
-    // staging dir, with the operators of their plans, and the binaryFile
-    // scans that read `content` (each once, also when a cached frame runs
-    // it) with the bytes of the files they selected. Stage inputMetrics
-    // cannot tell these bytes apart: a stage reading a cached frame counts
-    // its in-memory bytes as input, and the write's stage also reads the
-    // index parquet.
-    val staging = new org.apache.hadoop.fs.Path(index + ".staging").toUri.getPath
-    val writes  = new java.util.concurrent.atomic.AtomicInteger
-    val writeOps = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    def operators(plan: SparkPlan): Unit = plan.foreach {
-      case a: AdaptiveSparkPlanExec => writeOps.add(a); operators(a.executedPlan)
-      case q: QueryStageExec        => writeOps.add(q); operators(q.plan)
-      case m: InMemoryTableScanExec => writeOps.add(m); operators(m.relation.cachedPlan)
-      case o                        => writeOps.add(o)
-    }
+    // Counted from the executed plans: Spark file writes, and the
+    // binaryFile scans that read `content` with the bytes of the files they
+    // selected. Stage inputMetrics cannot tell these bytes apart from the
+    // other bytes a stage reads.
+    val fileWrites = new java.util.concurrent.atomic.AtomicInteger
     val reads   = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
     def contentScans(plan: SparkPlan): Unit = plan.foreach {
       case a: AdaptiveSparkPlanExec => contentScans(a.executedPlan)
       case q: QueryStageExec        => contentScans(q.plan)
-      case m: InMemoryTableScanExec => contentScans(m.relation.cachedPlan)
       case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] &&
           s.requiredSchema.fieldNames.contains("content") => reads.add(s)
       case _ =>
     }
-    val executions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        executions.incrementAndGet()
-        qe.analyzed.foreach {
-          case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toUri.getPath == staging =>
-            writes.incrementAndGet()
-            operators(qe.executedPlan)
-          case _ =>
-        }
-        contentScans(qe.executedPlan)
+    def onPlan(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
+      qe.analyzed.foreach {
+        case _: InsertIntoHadoopFsRelationCommand => fileWrites.incrementAndGet()
+        case _ =>
       }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        executions.incrementAndGet()
+      contentScans(qe.executedPlan)
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    /** The cycle's report, SQL executions and Spark jobs. */
-    def counted(run: => sync.Report): (sync.Report, Int, Int) = {
-      executions.set(0)
-      jobs.set(0)
-      spark.listenerManager.register(listener)
-      spark.sparkContext.addSparkListener(jobListener)
-      try {
-        val r = run
-        org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-        (r, executions.get, jobs.get)
-      } finally {
-        spark.listenerManager.unregister(listener)
-        spark.sparkContext.removeSparkListener(jobListener)
-      }
-    }
-    val (r, cycleRuns, cycleJobs) = counted(sync.run(spark))
-    assert(r.changed === 1 && r.indexed === 1 && r.deleted === 1)
-    assert(writes.get === 1, "one staged index rewrite per cycle")
-    // the rewrite is one narrow stage: keyed by the cycle's own delta, it
-    // needs no shuffle, no broadcast and no window
     import scala.jdk.CollectionConverters._
-    val wide = writeOps.asScala.filter {
-      case _: Exchange | _: WindowExec | _: QueryStageExec => true
-      case _                                               => false
-    }
-    assert(writeOps.asScala.exists(_.nodeName == "Execute InsertIntoHadoopFsRelationCommand") && wide.isEmpty,
-      wide.map(_.nodeName).mkString(", "))
+    val (r, cycleRuns, cycleJobs) = counted(onPlan)(sync.run(spark))
+    assert(r.changed === 1 && r.indexed === 1 && r.deleted === 1)
+    // the index's 20 rows less the deleted one; the edited one replaced
+    assert(r.indexRows === 19)
+    assert(Seq(r.listS, r.loadS, r.guardS, r.indexS, r.saveS).forall(_ > 0), r)
     val bytesRead = reads.asScala.toSeq.map(_.metrics("filesSize").value).sum
     assert(reads.size === 1 && bytesRead === Files.size(edited),
       s"${reads.size} content scans read $bytesRead bytes for a ${Files.size(edited)}-byte delta")
-    // the guard's collect and the index write; state is read and written
-    // on the driver
-    assert(cycleRuns <= 2 && cycleJobs <= 2,
-      s"$cycleRuns SQL executions and $cycleJobs jobs for a one-file cycle")
+    // the guard is the cycle's one Spark job: the index and state are
+    // rewritten on the driver
+    assert(fileWrites.get === 0 && cycleRuns <= 1 && cycleJobs === 1,
+      s"${fileWrites.get} Spark file writes, $cycleRuns SQL executions and $cycleJobs jobs for a one-file cycle")
     // no Spark work at all: the listing and the state load run on the driver
-    val (same, sameRuns, sameJobs) = counted(sync.run(spark))
+    val (same, sameRuns, sameJobs) = counted(_ => ())(sync.run(spark))
     assert(same.changed === 0 && sameRuns === 0 && sameJobs === 0,
       s"$sameRuns SQL executions and $sameJobs jobs for an unchanged cycle")
     assert(parquetFiles(state) === 1, "the state write must not split state into more files")
     assert(parquetFiles(index) === 1, "the index write must keep the index's file count")
+  }
+
+  test("Sync: a delta past the driver's result limit runs as several guard jobs") {
+    val root = tempDir("graft_batch")
+    (0 until 30).foreach { i =>
+      val f = root.resolve(f"d$i%02d.md")
+      Files.writeString(f, s"document $i")
+      touch(f, 1000000L)
+    }
+    val state = tempDir("graft_bs").resolve("state").toString
+    val index = tempDir("graft_bi").resolve("index").toString
+    val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
+    val key   = "spark.driver.maxResultSize"
+    val prior = spark.sparkContext.getConf.getOption(key)
+    // 12 files per job: 30 changed files run as 3 jobs
+    org.apache.spark.GraftTestConf.set(spark.sparkContext, key, Some((12L * (8 * 8 + 512) * 2).toString))
+    val (r, _, jobs) = try counted(_ => ())(sync.run(spark))
+      finally org.apache.spark.GraftTestConf.set(spark.sparkContext, key, prior)
+    assert(Sync.filesPerJob(spark, 8) > 1000)
+    assert(r.indexed === 30 && r.indexRows === 30 && jobs === 3)
+    assertMirrors(root, state, index, (0 until 30).map(i => f"d$i%02d.md"), Set.empty)
+  }
+
+  test("VectorIndex writes one file laid out as Spark's own writer lays it out") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val root  = mkCorpus()
+    val index = tempDir("graft_lay").resolve("index").toString
+    new Sync(root.toString, tempDir("graft_lays").resolve("state").toString, index, HashingEmbedder(8)).run(spark)
+    val copy  = tempDir("graft_layc").resolve("copy").toString
+    spark.read.parquet(index).coalesce(1).write.parquet(copy)
+    /** The file's row groups, the columns and types of its Spark row
+      * metadata, and each column's value encodings. Nullability is left
+      * out: Spark's own writes mark `id` or `embedding` required or
+      * optional depending on the plan that wrote them, so their level
+      * encodings (RLE, BIT_PACKED) vary too. */
+    def layout(dir: String) = {
+      import org.apache.parquet.column.Encoding.{BIT_PACKED, RLE}
+      import org.apache.spark.sql.types.{DataType, StructType}
+      val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length === 1, dir)
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(files.head.toURI),
+        spark.sparkContext.hadoopConfiguration))
+      val f = try in.getFooter finally in.close()
+      val row = f.getFileMetaData.getKeyValueMetaData.asScala.get("org.apache.spark.sql.parquet.row.metadata")
+        .map(DataType.fromJson(_).asInstanceOf[StructType].map(c => c.name -> c.dataType))
+      (f.getBlocks.size, row, f.getBlocks.asScala.flatMap(_.getColumns.asScala
+        .map(c => c.getPath.toDotString -> (c.getEncodings.asScala.toSet -- Set(RLE, BIT_PACKED)))))
+    }
+    assert(layout(index) === layout(copy))
+    assert(layout(index)._1 === 1 &&
+      layout(index)._2.map(_.map(_._1)) === Some(Seq("id", "embedding", "metadata", "version")))
+  }
+
+  test("Janitor keeps a driver-written index retired to .old with no live root") {
+    // a crash between StagedSwap's two renames: the live index is retired
+    // to `.old` and the new one not yet promoted, so `.old` is the only copy
+    val base  = tempDir("graft_jan")
+    val index = base.resolve("index")
+    val sync  = new Sync(mkCorpus().toString, tempDir("graft_jans").resolve("state").toString,
+      index.toString, HashingEmbedder(8))
+    assert(sync.run(spark).indexed === 3)
+    Files.move(index, base.resolve("index.old"))
+    assert(Janitor.cleanupScratch(spark, base.toString).isEmpty)
+    assert(Files.exists(base.resolve("index.old/_SUCCESS")))
   }
 
   /** Every file under `dir`, by relative name, with its bytes. */

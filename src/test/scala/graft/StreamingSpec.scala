@@ -310,28 +310,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(batch.nonEmpty)
   }
 
-  test("StreamingSync: incremental file discovery, checkpointed, idempotent") {
-    import java.nio.file.Files
-    val root  = tempDir("graft_ss")
-    val index = tempDir("graft_ss_i").resolve("index").toString
-    val ckpt  = tempDir("graft_ss_c").resolve("ckpt").toString
-    Files.writeString(root.resolve("a.md"), "alpha beta gamma")
-    Files.writeString(root.resolve("b.md"), "delta epsilon zeta")
-    Files.writeString(root.resolve("skip.txt"), "not markdown")
-    val sync = new graft.pipeline.StreamingSync(root.toString, index, ckpt,
-      graft.pipeline.HashingEmbedder(8))
-    sync.runOnce(spark)
-    val idx = new graft.pipeline.VectorIndex(index, 8)
-    assert(idx.read(spark).count() === 2)
-    // new file discovered incrementally; old ones not reprocessed
-    Files.writeString(root.resolve("c.md"), "eta theta iota")
-    sync.runOnce(spark)
-    assert(idx.read(spark).count() === 3)
-    // no new files -> no change
-    sync.runOnce(spark)
-    assert(idx.read(spark).count() === 3)
-  }
-
   test("watermarked windowed counts emit finalized windows") {
     val rows = Sessionize.windowedCounts(spark, sfDir).collect()
     assert(rows.nonEmpty) // no-data batch finalizes watermark-passed windows
