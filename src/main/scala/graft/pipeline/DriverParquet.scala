@@ -64,7 +64,9 @@ private[pipeline] object DriverParquet {
   /** Writes the rows `body` puts as one Parquet file of `schema` in `dir`,
     * named like a Spark part file, and returns how many it put. Rows are
     * written as they are put, so a reused row may be put; a row's fields
-    * past those of `schema` are not written. A `_SUCCESS` marker follows
+    * past those of `schema` are not written. `put` is not thread-safe: a
+    * `body` that puts from several threads calls it under its own lock
+    * ([[VectorIndex.rewrite]]). A `_SUCCESS` marker follows
     * the file, as Spark's committer leaves one: [[Janitor]] keeps a retired
     * copy that has one.
     */

@@ -306,11 +306,11 @@ object IndexMigration {
     * chains is removed). Chains whose codebooks quantize v − centroid
     * (residual, OPQ) pass None and stay sequential by necessity.
     */
-  private def migrateImpl(spark: SparkSession, root: String, corpus: DataFrame,
-                          idCol: String, vecCol: String, nlist: Int, iters: Int,
-                          trainSampleN: Option[Int] = None,
-                          keepOld: Boolean = false,
-                          trainIndependent: Option[DataFrame => Array[Array[Seq[Double]]]] = None)(
+  private[graft] def migrateImpl(spark: SparkSession, root: String, corpus: DataFrame,
+                                 idCol: String, vecCol: String, nlist: Int, iters: Int,
+                                 trainSampleN: Option[Int] = None,
+                                 keepOld: Boolean = false,
+                                 trainIndependent: Option[DataFrame => Array[Array[Seq[Double]]]] = None)(
       trainEncode: (DataFrame, DataFrame, Array[Seq[Double]], Option[Array[Array[Seq[Double]]]]) => (Array[Array[Seq[Double]]], DataFrame))
   : Migrated = FsLock.withLock(fs(spark), root)(synchronized {
     val f = fs(spark)
@@ -349,16 +349,16 @@ object IndexMigration {
       trainSample(survivors, idCol, n).cache())
     try {
     // centroid-independent codebook training overlaps the coarse Lloyd
-    // chain (same cached train relation; Spark serves concurrent actions)
-    val preTask = trainIndependent.map { f =>
-      val t = new java.util.concurrent.FutureTask[Array[Array[Seq[Double]]]](() => f(train))
-      val th = new Thread(t, "graft-migrate-pretrain")
-      th.setDaemon(true); th.start(); t
-    }
-    val cents = AnnIndex.kmeansCentroids(train, vecCol, idCol, nlist, iters)
-    val pre = preTask.map { t =>
-      try t.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    // chain (same cached train relation; Spark serves concurrent actions).
+    // A failed chain cancels the training's jobs and joins its thread, and
+    // a failed training lets the chain finish, before the finally below
+    // unpersists `train`.
+    def coarse = AnnIndex.kmeansCentroids(train, vecCol, idCol, nlist, iters)
+    val (pre, cents) = trainIndependent match {
+      case Some(f) =>
+        val (p, c) = Overlap.alongside(spark, "migrate-pretrain")(f(train))(coarse)
+        (Some(p), c)
+      case None => (None, coarse)
     }
     // ONE distributed encode pass under the new quantizer, written
     // cell-partitioned into a staging sibling (never into the live root)

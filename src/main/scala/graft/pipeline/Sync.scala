@@ -29,12 +29,16 @@ final class Sync(
     * loading state, in the guard's Spark jobs (which the new vectors are
     * written from as they arrive), in the rest of the index write and
     * saving state (0 for a phase the cycle skipped), and the rows the index
-    * write wrote.
+    * write wrote. These phases follow one another and add up to the
+    * cycle's wall time. `copyS` is the seconds the copy of the stored
+    * index rows took on its own thread: it runs during `guardS` and
+    * `indexS`, so it is part of them, not added to them.
     */
   case class Report(scanned: Long, changed: Long, skippedTooLong: Long,
                     indexed: Long, deleted: Long, dryRun: Boolean,
                     listS: Double = 0, loadS: Double = 0, guardS: Double = 0,
-                    indexS: Double = 0, saveS: Double = 0, indexRows: Long = 0)
+                    indexS: Double = 0, saveS: Double = 0, indexRows: Long = 0,
+                    copyS: Double = 0)
 
   /** One cycle. Its Spark work follows the delta, not the corpus: the
     * corpus is listed once, on the driver, and classified there against
@@ -53,8 +57,9 @@ final class Sync(
     * against `spark.driver.maxResultSize`, so a delta whose vectors pass
     * half of it runs as several jobs ([[Sync.filesPerJob]]): at the 1 GiB
     * default, one job per about 42 000 changed files at dim 1536. The index is
-    * written by one thread on the driver, as the reference's single
-    * process writes it.
+    * written on the driver, as the reference's single process writes it:
+    * a second driver thread copies the stored rows into the new file while
+    * the guard job runs, so a cycle pays for the slower of the two.
     * The walk is sequential: it trades Spark's parallel listing, which
     * starts a job once a directory has more than 32 subdirectories, for no
     * job at all. On a remote store with thousands of directories the
@@ -151,7 +156,7 @@ final class Sync(
     // vector, and since too-long paths are cached with their mtime
     // (flagged, below) they no longer resurface in the delta at all, so a
     // permanently over-long doc costs nothing after its first sync.
-    val indexRows = index.rewrite(spark, changed.map(_._2).toSet, gone)(guard(embed = true))
+    val (indexRows, copyS) = index.rewrite(spark, changed.map(_._2).toSet, gone)(guard(embed = true))
     val indexS = lap() - guardS
     // … then STATE, from the snapshot. Too-long documents are recorded
     // WITH their mtime and a too_long flag (not excluded): the flag is
@@ -167,7 +172,7 @@ final class Sync(
     state.save(spark,
       listed.map { case (_, p, m) => (p, m, verdicts.getOrElse(p, known.get(p).exists(_._2))) })
     Report(scanned, changed.size, tooLong, changed.size - tooLong, gone.size, dryRun,
-      listS, loadS, guardS, indexS, lap(), indexRows)
+      listS, loadS, guardS, indexS, lap(), indexRows, copyS)
   }
 }
 

@@ -19,9 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Every write is one keyed rewrite by ids the caller names ([[Sync]]
   * holds them on the driver already), then a staged swap, with no merge of
   * versions — the reference's upsert replaces by id too. The rewrite runs
-  * on the driver, as the reference's single process does: the stored rows
-  * and the new ones stream into one file, with no Spark job of its own, no
-  * output committer and no planning.
+  * on the driver, as the reference's single process does: the stored rows,
+  * copied on a second thread, and the new ones, as they arrive, stream
+  * into one file, with no Spark job of its own, no output committer and
+  * no planning.
   */
 final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] = None) {
 
@@ -66,18 +67,23 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     */
   def upsert(vectors: DataFrame, ids: Set[String], erase: Set[String] = Set.empty): Long =
     rewrite(vectors.sparkSession, ids, erase)(
-      DriverParquet.stream(vectors.select("id", "embedding", "metadata", "version")))
+      DriverParquet.stream(vectors.select("id", "embedding", "metadata", "version")))._1
 
   /** [[upsert]] of the rows `add` puts, rewritten on the driver with no
     * Spark job of its own and no output committer: the stored rows stream
     * from their files into one new file, skipping every id in `ids` or
-    * `erase`, followed by the put rows that [[upsert]] keeps. A put row
-    * holds the index's columns first; a null embedding is not written. A
-    * write that would skip no stored row and add none writes nothing. Then
-    * the embedder marker and the staged swap. Returns the rows written.
+    * `erase`, while `add` puts its rows, of which those [[upsert]] keeps are
+    * written too. The copy of the stored rows runs on a second thread
+    * alongside `add` ([[Overlap.alongside]]), so a write costs the slower
+    * of the two, not both; rows from both go into the one file under one
+    * lock, in no set order (every reader keys by id). A put row holds the
+    * index's columns first; a null embedding is not written. A write that
+    * would skip no stored row and add none writes nothing. Then the
+    * embedder marker and the staged swap. Returns the rows written and the
+    * seconds the copy of the stored rows took.
     */
   private[pipeline] def rewrite(spark: SparkSession, ids: Set[String], erase: Set[String])(
-      add: (InternalRow => Unit) => Unit): Long = {
+      add: (InternalRow => Unit) => Unit): (Long, Double) = {
     val p  = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireSameEmbedder(fs)
@@ -85,18 +91,25 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
     val skip = (ids ++ erase).map(UTF8String.fromString)
     val tmp  = new Path(path + ".staging")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    var touched = 0L
+    val touched = new java.util.concurrent.atomic.AtomicLong
+    var copyS   = 0.0
     val rows = DriverParquet.write(spark, tmp, schema) { put =>
-      DriverParquet.foreachRow(spark, p, schema) { r =>
-        if (skip(r.getUTF8String(0))) touched += 1 else put(r)
-      }
-      add { r =>
-        if (keep(r.getUTF8String(0)) && !r.isNullAt(1) && r.getArray(1).numElements == dim) {
-          touched += 1; put(r)
+      val lock = new Object
+      copyS = Overlap.alongside(spark, "index-copy") {
+        val t0 = System.nanoTime()
+        DriverParquet.foreachRow(spark, p, schema) { r =>
+          if (skip(r.getUTF8String(0))) touched.incrementAndGet() else lock.synchronized(put(r))
         }
-      }
+        (System.nanoTime() - t0) / 1e9
+      } {
+        add { r =>
+          if (keep(r.getUTF8String(0)) && !r.isNullAt(1) && r.getArray(1).numElements() == dim) {
+            touched.incrementAndGet(); lock.synchronized(put(r))
+          }
+        }
+      }._1
     }
-    if (touched == 0) { fs.delete(tmp, true); return 0 }
+    if (touched.get == 0) { fs.delete(tmp, true); return (0, copyS) }
     // write the new marker — or CARRY the existing one when this writer is
     // unstamped, so a legacy caller can't silently strip the protection off
     // a previously stamped index (the swap replaces the whole directory)
@@ -106,7 +119,7 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
       finally out.close()
     }
     StagedSwap.swap(fs, tmp, p, new Path(path + ".old"))
-    rows
+    (rows, copyS)
   }
 
   /** Delete rows by key — the erase half the reference lacks entirely

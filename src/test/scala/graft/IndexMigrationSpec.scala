@@ -69,6 +69,46 @@ class IndexMigrationSpec extends AnyFunSuite with SparkTestSession {
       "migrated index must equal the from-scratch build under the new quantizer")
   }
 
+  test("migrate: a failed codebook training lets the Lloyd chain finish, then throws with no work left") {
+    val root = freshRoot()
+    buildIndex(root, corpusDf(40))
+    val before = readIndex(root)
+    spark.catalog.clearCache() // suites share the session
+    // m = 3 does not divide dim 8: the overlapped codebook training throws
+    val e = intercept[IllegalArgumentException] {
+      IndexMigration.migrate(spark, root, corpusDf(40), "id", "vec", nlist, 3, ksub, dim)
+    }
+    assert(e.getMessage.contains("must divide"))
+    assert(leftRunning().isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed migration must unpersist what it cached")
+    assert(IndexMigration.version(spark, root) === 1L && readIndex(root) === before)
+  }
+
+  test("migrate: a failed Lloyd chain cancels the codebook training's jobs and joins it") {
+    val root = freshRoot()
+    buildIndex(root, corpusDf(40))
+    val before = readIndex(root)
+    spark.catalog.clearCache()
+    // corrupt vectors, which the Lloyd chain's first job fails to read as
+    // doubles, while the training beside it runs a job that would take minutes
+    val corpus = corpusDf(40).select(col("id"),
+      transform(col("vec"), v => concat(lit("x"), v.cast("string"))).as("vec"))
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      IndexMigration.migrateImpl(spark, root, corpus, "id", "vec", nlist, 1,
+        trainIndependent = Some { train =>
+          // one task: the chain's job needs the other slots to fail in
+          train.rdd.coalesce(1).map { _ => Thread.sleep(120000); 0 }.count()
+          Array.empty[Array[Seq[Double]]]
+        })((_, _, _, _) => throw new AssertionError("the encode must not run"))
+    }
+    assert(String.valueOf(e.getMessage).contains("CAST_INVALID_INPUT"), e)
+    assert((System.nanoTime() - t0) / 1e9 < 60, "the training's job must be cancelled, not waited out")
+    assert(leftRunning().isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed migration must unpersist what it cached")
+    assert(IndexMigration.version(spark, root) === 1L && readIndex(root) === before)
+  }
+
   test("migrate: tombstone log carried across versions — erase wins through migration") {
     import spark.implicits._
     val root = freshRoot()

@@ -582,6 +582,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     // the index's 20 rows less the deleted one; the edited one replaced
     assert(r.indexRows === 19)
     assert(Seq(r.listS, r.loadS, r.guardS, r.indexS, r.saveS).forall(_ > 0), r)
+    // the stored rows are copied on their own thread, during the guard
+    assert(r.copyS > 0 && r.copyS < r.guardS + r.indexS, r)
     val bytesRead = reads.asScala.toSeq.map(_.metrics("filesSize").value).sum
     assert(reads.size === 1 && bytesRead === Files.size(edited),
       s"${reads.size} content scans read $bytesRead bytes for a ${Files.size(edited)}-byte delta")
@@ -685,6 +687,49 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     intercept[java.io.FileNotFoundException] { missing.run(spark) }
     intercept[java.io.FileNotFoundException] { missing.run(spark, dryRun = true) }
     assert((fileTree(state), fileTree(index)) === before)
+  }
+
+  /** A three-file corpus synced once, then two of its files edited: a
+    * cycle over it copies the stored rows while its guard job runs.
+    */
+  private def editedCorpus(name: String): (Path, String, String) = {
+    val root  = mkCorpus()
+    val state = tempDir(s"graft_${name}s").resolve("state").toString
+    val index = tempDir(s"graft_${name}i").resolve("index").toString
+    Seq("a.md", "sub/b.md", "sub/nested/c.md").foreach(f => touch(root.resolve(f), 1000000L))
+    assert(new Sync(root.toString, state, index, HashingEmbedder(8)).run(spark).indexed === 3)
+    Files.writeString(root.resolve("a.md"), "a poisoned document")
+    Seq("a.md", "sub/b.md").foreach(f => touch(root.resolve(f), 1000100L))
+    (root, state, index)
+  }
+
+  test("Sync: a guard that fails mid-job leaves state and index byte-identical and no work running") {
+    val (root, state, index) = editedCorpus("gf")
+    val before  = (fileTree(state), fileTree(index))
+    val failing = new Embedder {
+      def dim = 8
+      def id  = HashingEmbedder(8).id
+      def embed(text: org.apache.spark.sql.Column) =
+        when(text.contains("poisoned"), raise_error(lit("an embedder failure")))
+          .otherwise(HashingEmbedder(8).embed(text))
+    }
+    val e = intercept[Exception](new Sync(root.toString, state, index, failing).run(spark))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("an embedder failure")), e)
+    assert((fileTree(state), fileTree(index)) === before)
+    assert(leftRunning().isEmpty)
+  }
+
+  test("Sync: an unreadable stored index leaves state and index byte-identical and no work running") {
+    val (root, state, index) = editedCorpus("uf")
+    val part = new java.io.File(index).listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
+    Files.write(part, Files.readAllBytes(part).take((Files.size(part) / 2).toInt))
+    val before = (fileTree(state), fileTree(index))
+    val e = intercept[Exception](new Sync(root.toString, state, index, HashingEmbedder(8)).run(spark))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(part.getFileName.toString)), e)
+    assert((fileTree(state), fileTree(index)) === before)
+    assert(leftRunning().isEmpty)
   }
 
   test("Sync: rootDir is a literal path, not a glob") {

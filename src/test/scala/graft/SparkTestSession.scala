@@ -1,14 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.{BeforeAndAfterAll, Suite}
+import org.scalatest.{BeforeAndAfterAll, Failed, Outcome, Succeeded, TestSuite, TestSuiteMixin}
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-/** One shared local session across all suites (getOrCreate). */
-trait SparkTestSession extends BeforeAndAfterAll { this: Suite =>
+/** One shared local session across all suites (getOrCreate). A test that
+  * passes but leaves work running fails: a live [[graft.pipeline.Overlap]]
+  * thread, or an active Spark job.
+  */
+trait SparkTestSession extends BeforeAndAfterAll with TestSuiteMixin { this: TestSuite =>
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -31,6 +34,34 @@ trait SparkTestSession extends BeforeAndAfterAll { this: Suite =>
     tempDirs.add(dir)
     dir
   }
+
+  /** The work still running: live overlap threads, then Spark jobs still
+    * active once the listener bus has caught up. A failed job wakes its
+    * caller before its end event is posted, so jobs get a few seconds to
+    * end; an overlap thread gets none, as the helper joins it before it
+    * returns.
+    */
+  def leftRunning(): Seq[String] = {
+    val threads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(graft.pipeline.Overlap.ThreadPrefix))
+      .map(t => s"thread ${t.getName}")
+    def jobs = SparkSession.getDefaultSession.toSeq.flatMap { s =>
+      org.apache.spark.GraftListenerDrain.waitUntilEmpty(s.sparkContext, 30000)
+      s.sparkContext.statusTracker.getActiveJobIds.toSeq.map(id => s"Spark job $id")
+    }
+    val deadline = System.nanoTime() + 5000000000L
+    var active   = jobs
+    while (active.nonEmpty && System.nanoTime() < deadline) { Thread.sleep(20); active = jobs }
+    threads ++ active
+  }
+
+  abstract override def withFixture(test: NoArgTest): Outcome =
+    super.withFixture(test) match {
+      case Succeeded =>
+        val left = leftRunning()
+        if (left.isEmpty) Succeeded else Failed(s"the test left work running: ${left.mkString(", ")}")
+      case other => other
+    }
 
   override protected def afterAll(): Unit =
     try super.afterAll()
