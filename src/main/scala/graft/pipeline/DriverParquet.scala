@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -12,6 +14,9 @@ import org.apache.spark.sql.execution.datasources.parquet._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
 /** Parquet tables read and written on the driver, with no Spark job,
   * through Spark's own Parquet row support: rows are read by
   * `VectorizedParquetRecordReader` and written by the `OutputWriter` that a
@@ -20,8 +25,51 @@ import org.apache.spark.sql.types.StructType
   * encodings and Spark row metadata as one Spark's writer leaves, and
   * `spark.read` reads it back with the same types. [[stream]] brings a
   * frame's rows to the driver to be written there.
+  *
+  * Files the driver creates go through [[fileSystem]]. With no
+  * native-hadoop library loaded, Hadoop's local file system sets the mode
+  * of every file and directory it creates by starting a `chmod` process:
+  * 12 per edit cycle, about 3 ms each, most of the index write's and the
+  * state save's time beyond the guard job. So on the
+  * `file` scheme these writes use [[LocalFs]], which sets the same mode
+  * bits in-process and is otherwise the stock file system: the same
+  * `.crc` checksums, renames and deletes. A session that names its own
+  * `fs.file.impl` keeps it; the session's conf, Spark's own writes and
+  * every other scheme are left as they are.
   */
-private[pipeline] object DriverParquet {
+private[graft] object DriverParquet {
+
+  /** Hadoop's local file system, with file modes set in-process. */
+  final class LocalFs extends LocalFileSystem(new RawFs)
+
+  /** Sets a mode made of the 9 permission bits through `java.nio`, as the stock
+    * `chmod` would; any other bit, or a file system without POSIX
+    * attributes, takes the stock path.
+    */
+  final class RawFs extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      if ((permission.toShort & ~0x1ff) != 0) super.setPermission(p, permission)
+      else try Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(permission.toString))
+      catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+  }
+
+  /** The session's Hadoop conf, copied, with [[LocalFs]] as the `file`
+    * scheme's file system unless the session names one. Hadoop caches file
+    * systems by scheme, not by conf, so this one is not cached.
+    */
+  private def writeConf(spark: SparkSession): Configuration = {
+    val conf = spark.sessionState.newHadoopConf()
+    if (conf.get("fs.file.impl") == null) {
+      conf.setClass("fs.file.impl", classOf[LocalFs], classOf[FileSystem])
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+    }
+    conf
+  }
+
+  /** The file system through which the driver creates, renames and
+    * deletes files at `path`.
+    */
+  def fileSystem(spark: SparkSession, path: Path): FileSystem = path.getFileSystem(writeConf(spark))
 
   /** The data files of the table at `dir`, as Spark's file index reads
     * them: no hidden name, and no leading `_` (the index keeps `_metadata`
@@ -73,7 +121,7 @@ private[pipeline] object DriverParquet {
   def write(spark: SparkSession, dir: Path, schema: StructType)(
       body: (InternalRow => Unit) => Unit): Long = {
     val sql     = spark.sessionState.conf
-    val job     = Job.getInstance(spark.sessionState.newHadoopConf())
+    val job     = Job.getInstance(writeConf(spark))
     val factory = ParquetUtils.prepareWrite(sql, job, schema, new ParquetOptions(Map.empty[String, String], sql))
     val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
     val name    = s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(context)}"

@@ -340,7 +340,7 @@ object IndexErasure {
           // the STAGING dir so promotion is atomic w.r.t. liveness (a
           // crash between rename and a later marker write would leave the
           // batch silently invisible, its content stranded at .old)
-          f.create(new Path(part, "_SUCCESS")).close()
+          DriverParquet.fileSystem(spark, part).create(new Path(part, "_SUCCESS")).close()
           StagedSwap.swap(f, part, live, new Path(live.toString + ".old"))
         } else {
           // fully-emptied batch: no partition in the staged output — swap

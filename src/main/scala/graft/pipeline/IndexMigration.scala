@@ -373,7 +373,7 @@ object IndexMigration {
       s.isDirectory && s.getPath.getName.startsWith("cell="))
     // stamp the new version INSIDE the staging dir so the marker and the
     // content promote in the same rename
-    val out = f.create(markerIn(tmp), true)
+    val out = DriverParquet.fileSystem(spark, tmp).create(markerIn(tmp), true)
     try out.write((vBefore + 1).toString
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()

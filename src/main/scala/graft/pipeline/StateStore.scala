@@ -61,7 +61,7 @@ final class StateStore(path: String) {
   def save(spark: SparkSession, rows: Iterable[(String, Long, Boolean)]): Unit = {
     val p   = new Path(path)
     val tmp = new Path(path + ".staging")
-    val fs  = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs  = DriverParquet.fileSystem(spark, p)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     DriverParquet.write(spark, tmp, schema) { put =>
       rows.foreach { case (file, mtime, tooLong) => put(InternalRow(UTF8String.fromString(file), mtime, tooLong)) }

@@ -64,15 +64,16 @@ final class Sync(
     * starts a job once a directory has more than 32 subdirectories, for no
     * job at all. On a remote store with thousands of directories the
     * parallel listing can be faster.
-    * Measured at `local[4]` on a 4-vCPU Xeon VM with 20 000 files in 200
+    * Measured at `local[4]` on a 4-vCPU VM with 20 000 files in 200
     * directories (a dim-64 embedder; one JVM per sequence of cold,
-    * unchanged, one-file and all-touched cycles, three runs): a cold sync
-    * took 17.7–23.2 s, an unchanged cycle 0.5–0.8 s, a one-file cycle
-    * 1.2–1.3 s and an all-touched cycle 4.3–6.3 s, against 28.9–36.9 s,
-    * 0.5–0.7 s, 1.7–2.0 s and 9.1–10.1 s in the same window when the index
-    * write was a Spark stage and the guarded frame was cached. An
-    * all-touched cycle as the only one of a fresh JVM, as a cron job runs
-    * it, took 22.7–24.6 s with session start.
+    * unchanged, one-file and all-touched cycles, four runs in a noisy
+    * window): a cold sync took 12.8–20.3 s, an unchanged cycle
+    * 0.35–0.75 s, a one-file cycle 0.6–1.7 s and an all-touched cycle
+    * 3.6–8.3 s. The index write and the state save create 12 files and
+    * directories per edit cycle and start no process for them
+    * ([[DriverParquet.fileSystem]]): at 500 files, dim 1536, they take
+    * ~10 and ~7 ms beyond the guard job, against ~31–38 and ~22–27 ms
+    * when each create started a `chmod` process.
     */
   def run(spark: SparkSession, dryRun: Boolean = false): Report = {
     import graft.functions.TextFunctions

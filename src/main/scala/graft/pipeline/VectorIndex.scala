@@ -85,7 +85,7 @@ final class VectorIndex(path: String, val dim: Int, embedderId: Option[String] =
   private[pipeline] def rewrite(spark: SparkSession, ids: Set[String], erase: Set[String])(
       add: (InternalRow => Unit) => Unit): (Long, Double) = {
     val p  = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = DriverParquet.fileSystem(spark, p)
     requireSameEmbedder(fs)
     val keep = (ids -- erase).map(UTF8String.fromString)
     val skip = (ids ++ erase).map(UTF8String.fromString)

@@ -675,6 +675,80 @@ class PipelineSpec extends AnyFunSuite with SparkTestSession {
     finally tree.close()
   }
 
+  /** A one-directory corpus synced cold under `base`, then one of its
+    * files edited and synced again; returns state and index.
+    */
+  private def coldThenEdit(base: Path): (String, String) = {
+    val root = Files.createDirectories(base.resolve("corpus"))
+    (0 until 3).foreach { i =>
+      Files.writeString(root.resolve(s"d$i.md"), s"document $i")
+      touch(root.resolve(s"d$i.md"), 1000000L)
+    }
+    val state = base.resolve("state").toString
+    val index = base.resolve("index").toString
+    val sync  = new Sync(root.toString, state, index, HashingEmbedder(8))
+    assert(sync.run(spark).indexed === 3)
+    Files.writeString(root.resolve("d1.md"), "an edited document")
+    touch(root.resolve("d1.md"), 1000100L)
+    val r = sync.run(spark)
+    assert(r.changed === 1 && r.indexed === 1)
+    (state, index)
+  }
+
+  test("Sync: an edit cycle starts no child process") {
+    val base = tempDir("graft_fork").toRealPath()
+    val (_, started) = processesStarted(base.toString)(coldThenEdit(base))
+    assert(started.size === 0, started.take(3).mkString("; "))
+  }
+
+  test("Sync: driver-written files keep Hadoop's modes and checksums") {
+    import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
+    import scala.jdk.CollectionConverters._
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    def mode(p: Path) = java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    def entries(dir: String): Seq[Path] = {
+      val tree = Files.walk(java.nio.file.Paths.get(dir))
+      try tree.iterator().asScala.toList finally tree.close()
+    }
+    def check(prefix: String): Unit = {
+      // what Hadoop's stock local file system gives a new file and directory
+      val stock = new LocalFileSystem
+      stock.initialize(new java.net.URI("file:///"), hadoop)
+      try {
+        val ref = tempDir(s"${prefix}_ref")
+        stock.create(new HPath(ref.resolve("dir/file").toUri)).close()
+        val expected = Map(true -> mode(ref.resolve("dir")), false -> mode(ref.resolve("dir/file")))
+        val (state, index) = coldThenEdit(tempDir(prefix))
+        for (dir <- Seq(state, index); p <- entries(dir))
+          assert(mode(p) === expected(Files.isDirectory(p)), p)
+        val files = Seq(state, index).flatMap(entries).filter(Files.isRegularFile(_))
+        val data  = files.filterNot(_.getFileName.toString.endsWith(".crc"))
+        assert(data.map(_.getFileName.toString).toSet.contains("_graft_embedder"))
+        assert(files.size === 2 * data.size, files)
+        // a read through the stock file system verifies each file's .crc
+        data.foreach { f =>
+          assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f)
+          val in = stock.open(new HPath(f.toUri))
+          try assert(in.readAllBytes().toSeq === Files.readAllBytes(f).toSeq, f) finally in.close()
+        }
+      } finally stock.close()
+    }
+    check("graft_mode")
+    val umask = "fs.permissions.umask-mode"
+    val prior = Option(hadoop.get(umask))
+    hadoop.set(umask, "077")
+    try check("graft_mode077") finally prior.fold(hadoop.unset(umask))(hadoop.set(umask, _))
+
+    val probe = new HPath(tempDir("graft_mode_fs").toUri)
+    assert(DriverParquet.fileSystem(spark, probe).isInstanceOf[DriverParquet.LocalFs])
+    assert(hadoop.get("fs.file.impl") === null && hadoop.get("fs.file.impl.disable.cache") === null,
+      "the session's conf is left as it was")
+    hadoop.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    // the session's own choice: the file system its conf gives, cached
+    try assert(DriverParquet.fileSystem(spark, probe) eq probe.getFileSystem(hadoop))
+    finally hadoop.unset("fs.file.impl")
+  }
+
   test("Sync: a missing rootDir throws and leaves state and index byte-identical") {
     val root  = mkCorpus()
     val state = tempDir("graft_rs").resolve("state").toString

@@ -35,6 +35,27 @@ trait SparkTestSession extends BeforeAndAfterAll with TestSuiteMixin { this: Tes
     dir
   }
 
+  /** Runs `body` under an in-process JFR recording of `jdk.ProcessStart`
+    * and returns its result with the command lines of the processes it
+    * started that name `fragment`, such as a spec's own directory: other
+    * suites' processes in the same JVM do not name it.
+    */
+  def processesStarted[T](fragment: String)(body: => T): (T, Seq[String]) = {
+    val recording = new jdk.jfr.Recording()
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      val result = try body finally recording.stop()
+      val dump = Files.createTempFile("graft-processes", ".jfr")
+      try {
+        recording.dump(dump)
+        val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+          .map(e => String.valueOf(e.getString("command"))).filter(_.contains(fragment))
+        (result, commands)
+      } finally Files.deleteIfExists(dump)
+    } finally recording.close()
+  }
+
   /** The work still running: live overlap threads, then Spark jobs still
     * active once the listener bus has caught up. A failed job wakes its
     * caller before its end event is posted, so jobs get a few seconds to
